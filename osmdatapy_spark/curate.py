@@ -9,8 +9,9 @@ DataFrame algebra — nothing executes until an action), mirroring how the
 reference's ``Query`` composes predicates before ``osm.query`` runs
 (reference osmquery.py:165-209).  Every step — including
 ``fuzzy_dedup`` since r14 — composes lazily; the shingle-set cache the
-fuzzy pass persists is managed per call site (functions/_cache) and is
-released on the next invocation or via ``release("curate.fuzzy_sets")``.
+fuzzy pass persists is a ``session.managed_persist``: it lives until an
+action has materialized it and a later ``fuzzy_dedup`` persists again
+(or ``session.release("curate.fuzzy_sets")``).
 
 Default recipe (``Curate.default_recipe``): normalize → exact dedup →
 fuzzy (n-gram Jaccard) dedup → quality gate → per-domain cap.  Every
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-from osmdatapy_spark.functions._cache import managed_persist
+from osmdatapy_spark.session import managed_persist
 
 
 class Curate:
@@ -129,7 +130,8 @@ class Curate:
         candidate+verify pipeline eagerly at chain time; see the
         drop-set comment below for the A/B that removed it).  The
         shingle-set cache is a managed persist: live through the final
-        action (which reads it 3x), released on the next invocation.
+        action (which reads it 3x), released by a later invocation once
+        that action has materialized it.
         """
         from osmdatapy_spark.functions.dedup import (
             jaccard_candidate_pairs,
@@ -176,8 +178,9 @@ class Curate:
         # reasons are now served without the eager job:
         # - the shingle cache is a managed_persist — it must be live
         #   through the final action anyway (the dupes subtree reads it
-        #   3x inside that job) and is released on the next invocation
-        #   (or release("curate.fuzzy_sets") explicitly);
+        #   3x inside that job); a later invocation releases it only once
+        #   that action has materialized it, so a second chain built
+        #   before this one runs leaves it in place;
         # - the join is UNHINTED, so AQE picks broadcast from the
         #   drop-set's ACTUAL runtime shuffle size and falls back to
         #   sort-merge for pervasively-duplicated corpora — the

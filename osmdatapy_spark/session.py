@@ -12,13 +12,39 @@ Local testing runs on ``local[N]`` but every setting is chosen for the
   deployment overrides to ~2-3× total cores, then AQE coalesces).
 - session timezone pinned to UTC so timestamp semantics are stable across
   driver/executor locales (and match the DuckDB oracle).
+
+This module is also the one home of driver-side state that belongs to a
+session or a JVM.  Table and spread-table handles, parsed SQL
+expressions, the way-geometry Column, the PBF source registration and
+persisted intermediate frames all live in one store, keyed by the live
+owner object: the ``SparkSession`` for session-bound handles, the
+``SparkContext`` for JVM-bound expressions.  The key holds the object,
+so its identity cannot be reused while the entry exists; entries of
+stopped owners are pruned on the next miss, and a session's first miss
+applies ``tune_session``.  The entries are plan handles, not data: every
+action still computes from its inputs.
+
+Contract:
+
+- datasets are static within a session: a table handle keeps the file
+  listing and schema it was built with until ``invalidate(sf_dir)`` is
+  called for its directory;
+- a frame persisted with ``managed_persist(df, key)`` lives until its
+  cache is materialized and the same call site persists again (or
+  ``release`` drops it).
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from typing import Any, Callable, TypeVar
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark import SparkContext, StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+
+V = TypeVar("V")
 
 
 def get_spark(app_name: str = "osmdatapy-spark", cpus: int | None = None) -> SparkSession:
@@ -54,11 +80,17 @@ def get_spark(app_name: str = "osmdatapy-spark", cpus: int | None = None) -> Spa
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable defaults to an externally-created session.
+    """Apply runtime-settable defaults to an externally-created session,
+    once per session (on its first miss in the store).
 
     The driver hands us its own SparkSession; only touch conf keys that are
     runtime-mutable (timezone, AQE) and leave cluster sizing alone.
     """
+    memo(spark, ("tuned",), lambda: True)
+    return spark
+
+
+def _apply_tuning(spark: SparkSession) -> None:
     for k, v in (
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.adaptive.enabled", "true"),
@@ -71,4 +103,136 @@ def tune_session(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # immutable in this deployment — fine, defaults are sane
-    return spark
+
+
+# owner (SparkSession or SparkContext) -> {key: value}
+_STATE: dict[Any, dict[tuple, Any]] = {}
+_LOCK = threading.Lock()
+
+# frames one call site persisted that no action has materialized yet stay
+# registered; past this many the oldest is released anyway
+_MAX_PENDING = 8
+
+
+def _stopped(owner: Any) -> bool:
+    sc = getattr(owner, "_sc", owner)
+    try:
+        return sc._jsc is None or sc._jsc.sc().isStopped()
+    except Py4JError:
+        return True
+
+
+def memo(owner: Any, key: tuple, build: Callable[[], V]) -> V:
+    """Return ``owner``'s value for ``key``, building it on a miss.
+
+    ``owner`` is a SparkSession (session-bound handles) or a SparkContext
+    (JVM-bound expressions).  Keys that depend on a dataset directory
+    start with it, so ``invalidate`` can find them.
+    """
+    with _LOCK:
+        entries = _STATE.get(owner)
+        if entries is not None and key in entries:
+            return entries[key]
+        for o in [o for o in _STATE if o is not owner and _stopped(o)]:
+            del _STATE[o]
+        if entries is None:
+            entries = _STATE[owner] = {}
+            if isinstance(owner, SparkSession):
+                _apply_tuning(owner)
+    value = build()  # outside the lock: a build may memo other keys
+    with _LOCK:
+        return entries.setdefault(key, value)
+
+
+def jvm_memo(key: tuple, build: Callable[[], V]) -> V:
+    """``memo`` owned by the running SparkContext, for Columns and other
+    JavaObjects that belong to the JVM rather than to one session; built
+    uncached when no context is running."""
+    sc = SparkContext._active_spark_context
+    return build() if sc is None else memo(sc, key, build)
+
+
+def invalidate(sf_dir: str) -> None:
+    """Forget every handle built from ``sf_dir``: the table and
+    spread-table DataFrames of every session and the trained
+    ``functions.artifacts`` under that directory.  Call it after
+    rewriting a dataset in place; the next read lists the new files."""
+    from osmdatapy_spark.functions import artifacts
+
+    with _LOCK:
+        for entries in _STATE.values():
+            for k in [k for k in entries if k[0] == sf_dir]:
+                del entries[k]
+    for k in [k for k in artifacts._CACHE if k[:1] == (sf_dir,)]:
+        del artifacts._CACHE[k]
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Py4JError:
+        pass  # session already stopped — nothing to release
+
+
+def _materialized(cache_manager: Any, df: DataFrame) -> bool | None:
+    """True once an action has filled every partition of ``df``'s cache,
+    False before, None when ``df`` is no longer cached."""
+    try:
+        hit = cache_manager.lookupCachedData(df._jdf)
+        if hit.isEmpty():
+            return None
+        return hit.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    except Py4JError:
+        return None  # session stopped
+
+
+def managed_persist(df: DataFrame, key: str) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK_DESER, as ``DataFrame.persist``)
+    under the call-site ``key``.
+
+    Query builders persist frames that stay part of the returned plan, so
+    they cannot unpersist them themselves.  Instead, frames the same key
+    persisted earlier are released here once their cache is materialized.
+    A frame no action has filled yet stays registered, so two pipelines
+    chained before either runs keep their caches (up to ``_MAX_PENDING``
+    per key).  Releasing a materialized frame is always safe: a caller
+    that still holds it simply recomputes its lineage."""
+    spark = df.sparkSession
+    # the JVM cache manager and storage level cost 2 + 10 py4j round trips
+    # to look up; once per session keeps a persist at one round trip
+    cache_manager, level = memo(
+        spark,
+        ("persist",),
+        lambda: (
+            spark._jsparkSession.sharedState().cacheManager(),
+            spark._sc._getJavaStorageLevel(StorageLevel.MEMORY_AND_DISK_DESER),
+        ),
+    )
+    frames = memo(spark, ("persisted", key), list)
+    with _LOCK:
+        pending = []
+        for prev in frames:
+            loaded = _materialized(cache_manager, prev)
+            if loaded is False:
+                pending.append(prev)
+            elif loaded:
+                _unpersist(prev)
+        while len(pending) >= _MAX_PENDING:
+            _unpersist(pending.pop(0))
+        frames[:] = pending + [df]
+    df.is_cached = True
+    df._jdf.persist(level)
+    return df
+
+
+def release(key: str | None = None) -> None:
+    """Unpersist the frames registered under ``key`` (every key when
+    None), in every session."""
+    with _LOCK:
+        frames = []
+        for entries in _STATE.values():
+            for k in [k for k in entries if k[0] == "persisted"]:
+                if key is None or k[1] == key:
+                    frames += entries.pop(k)
+    for df in frames:
+        _unpersist(df)

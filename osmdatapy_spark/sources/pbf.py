@@ -67,6 +67,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from osmdatapy_spark.session import memo
 from osmdatapy_spark.sources.pbf_codec import (
     BlobSpan,
     blob_dictionary_has,
@@ -632,18 +633,17 @@ class OsmPbfSimpleStreamReader(SimpleDataSourceStreamReader):
         return self._rows(files)
 
 
-_REGISTERED: set[int] = set()
-
-
 def register(spark: SparkSession) -> None:
-    """Idempotent per-session registration.  Also enables Spark 4's Python
-    data-source filter pushdown (runtime-settable; a reader implementing
-    ``pushFilters`` errors if the flag is off)."""
-    key = id(spark)
-    if key not in _REGISTERED:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        spark.dataSource.register(PbfDataSource)
-        _REGISTERED.add(key)
+    """Idempotent per-session registration (``session.memo``).  Also
+    enables Spark 4's Python data-source filter pushdown (runtime-settable;
+    a reader implementing ``pushFilters`` errors if the flag is off)."""
+    memo(spark, ("pbf_source",), lambda: _register(spark))
+
+
+def _register(spark: SparkSession) -> bool:
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.dataSource.register(PbfDataSource)
+    return True
 
 
 def read_pbf(

@@ -5,16 +5,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osmdatapy_spark.session import tune_session
-from osmdatapy_spark.tables import load_table
+from osmdatapy_spark.session import memo
+from osmdatapy_spark.tables import load_table, spread
 
-
-def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_session(spark)
-    return load_table(spark, sf_dir, name)
-
-
-_TS_MEMO: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
+T = load_table
 
 
 def TS(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -24,15 +18,7 @@ def TS(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     load_table — the spread decision (scan partition count vs default
     parallelism) is fixed per (session, table), and the .rdd partition
     probe costs driver round trips per call."""
-    from osmdatapy_spark.tables import spread
-
-    key = (id(spark), sf_dir, name)
-    hit = _TS_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
-    df = spread(T(spark, sf_dir, name))
-    _TS_MEMO[key] = (spark, df)
-    return df
+    return memo(spark, (sf_dir, "spread", name), lambda: spread(T(spark, sf_dir, name)))
 
 
 def coords_lookup(

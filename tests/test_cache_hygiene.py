@@ -1,7 +1,7 @@
 """Session-lifetime persist hygiene (r13 verdict ask #6): repeated
 invocations of queries that persist() intermediate frames must not grow
 the session's cached-RDD set — each call site releases its previous
-invocation's frame via functions/_cache.managed_persist."""
+invocation's frame via session.managed_persist."""
 
 from __future__ import annotations
 
@@ -35,7 +35,7 @@ def test_no_session_lifetime_cache_growth(spark, qname):
 
 
 def test_managed_persist_replaces_previous(spark):
-    from osmdatapy_spark.functions._cache import managed_persist, release
+    from osmdatapy_spark.session import managed_persist, release
 
     base = _n_cached(spark)
     df1 = managed_persist(spark.range(10), "test.hygiene")

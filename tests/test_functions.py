@@ -746,8 +746,9 @@ def test_pq_topk_recall_and_compression(spark):
     the exact top-3, and the code representation is m_sub small ints."""
     from osmdatapy_spark.functions.similarity import (
         brute_force_topk,
+        as_double_sql,
         pq_codebooks,
-        pq_codes,
+        pq_codes_sql,
         pq_topk,
     )
     from pyspark.sql import functions as F
@@ -772,7 +773,7 @@ def test_pq_topk_recall_and_compression(spark):
     assert all(len(c) == 4 for b in books for c in b)
 
     codes = corpus.select(
-        pq_codes(F.transform(col("embedding"), lambda x: x.cast("double")), books, 8).alias("c")
+        F.expr(pq_codes_sql(as_double_sql("embedding"), books, 8)).alias("c")
     ).collect()
     assert all(len(r["c"]) == 2 for r in codes)
     assert all(0 <= v <= 3 for r in codes for v in r["c"])
@@ -783,6 +784,16 @@ def test_pq_topk_recall_and_compression(spark):
     approx_set = {(r["probe_id"], r["nbr_id"]) for r in approx.collect()}
     recall = len(exact_set & approx_set) / len(exact_set)
     assert recall >= 0.75, f"PQ recall {recall:.2f} too low"
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_nearest_cell_sql_rejects_non_finite_centroid(bad):
+    """A NaN/Inf centroid component would render as a cast that reads
+    NULL and silently reassign cells; the SQL builder raises instead."""
+    from osmdatapy_spark.functions.similarity import nearest_cell_sql
+
+    with pytest.raises(ValueError, match="non-finite"):
+        nearest_cell_sql("`v`", [[0.0, 1.0], [bad, 2.0]])
 
 
 def test_pq_adist_orders_like_true_distance(spark):
