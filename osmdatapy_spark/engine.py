@@ -1,21 +1,36 @@
 """``OSM`` facade — the engine entry point (reference ``osmdatapy/osmdata.py``).
 
-The reference's ``OSM(filepath)`` builds three driver-resident caches
-(block offsets, string dictionary, node coords — ``osmdata.py:29-39``);
-none of those exist here because Spark's scan machinery replaces them
-(SURVEY.md §1.5): elements live in a DataFrame with a ``tags`` map,
-node coordinates are just the ``nodes`` table, and "querying" is a
-filter/projection pipeline Catalyst optimizes.
+The reference's ``OSM(filepath)`` scans the file once (pass 1) into three
+driver-resident caches — block offsets, string dictionary, node coords,
+``osmdata.py:29-39`` — and answers every query from them.  Here the
+decoded file itself is the cache: opening a ``.pbf`` gives one
+full-schema scan through the PBF data source, persisted
+(MEMORY_AND_DISK, columnar) by ``session.shared_persist`` and shared by
+every ``OSM`` opened on the same file in the session.  The first action
+decodes the file; every later table access and query reads the cache.
+Elements carry a ``tags`` map, node coordinates are the ``nodes`` table
+(SURVEY.md §1.5), and "querying" is a filter/projection pipeline
+Catalyst optimizes.
+
+Lifetime of the decoded scan: it is keyed by the resolved path and by the
+name, size and ``mtime_ns`` of every file the path expands to, so a file
+rewritten in place is decoded afresh on its next access, and the old
+cache is released when the new one is persisted.  A cache dropped by
+``spark.catalog.clearCache()`` or ``session.release`` is persisted again
+on the next access.
 
 Construction paths:
 - ``OSM.from_tables(elements, nodes, ...)`` — any DataFrames in the §1.5
   data model (bronze parquet/Delta tables at scale);
-- ``OSM(path)`` with a ``.pbf`` file — reads through the custom PBF data
-  source (``osmdatapy_spark.sources.pbf``).
+- ``OSM(path)`` / ``OSM.from_pbf`` with a ``.pbf`` file (or a directory
+  or glob of them) — the decoded-once scan above;
+- ``OSM.from_xml`` — ``.osm`` XML through the osmxml data source, split
+  the same way, uncached.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +47,20 @@ from osmdatapy_spark.operators.geometry import (
     GEOM_POINT,
 )
 from osmdatapy_spark.query import OSMTYPE_RELATION, OSMTYPE_WAY, Query
+from osmdatapy_spark.session import managed_persist, shared_persist
+from osmdatapy_spark.sources.pbf import bronze_tables, expand_pbf_paths, read_pbf
+
+
+def _pbf_scan(spark: SparkSession, path: str) -> DataFrame:
+    """The session's decoded-once, persisted full-schema scan of the PBF
+    input at ``path``, keyed by content (see the module docstring)."""
+    resolved = os.path.realpath(path)
+    version = tuple(
+        (f, st.st_size, st.st_mtime_ns)
+        for f in expand_pbf_paths(resolved)
+        for st in (os.stat(f),)
+    )
+    return shared_persist(spark, resolved, version, lambda: read_pbf(spark, resolved))
 
 
 class OSM:
@@ -48,34 +77,28 @@ class OSM:
         # drop-in parity with the reference's entry point OSM(filepath)
         # (osmdata.py:29): a path opens through the PBF data source on the
         # active (or a fresh tuned) session
-        import os
-
-        pbf_meta = None
+        pbf: "tuple[SparkSession, str] | None" = None
         if isinstance(elements, (str, os.PathLike)):
-            path = str(elements)
             if spark is None:
                 spark = SparkSession.getActiveSession()
             if spark is None:
                 from osmdatapy_spark.session import get_spark
 
                 spark = get_spark()
-            pbf_meta = (spark, path)
-            # LAZY relations (round 4): each Python-DS relation costs
-            # ~0.15s of driver-side construction (py4j + worker schema
-            # round-trip), and a typical query touches 2 of the 4 bronze
-            # tables — the properties below build each on first access
-            # (measured: ~0.5s off every from_pbf+query wall)
-            elements = nodes = way_refs = rel_members = None
+            pbf = (spark, str(elements))
         elif nodes is None:
             raise ValueError("OSM needs a nodes table (or a .pbf path)")
-        self._elements = elements
-        self._nodes = nodes
-        self._way_refs = way_refs
-        self._rel_members = rel_members
-        # set when constructed from a .pbf path: lets query() re-derive a
-        # KIND-PRUNED elements scan (P2 block pruning) instead of decoding
-        # every element kind and filtering post-decode
-        self._pbf_meta: "tuple[SparkSession, str] | None" = pbf_meta
+        # set when opened from a .pbf path: the bronze tables are then
+        # projections of the session's decoded-once scan, looked up on
+        # every access (nothing is decoded before the first action)
+        self._pbf = pbf
+        self._split: "tuple[DataFrame, dict] | None" = None
+        self._tables = None if pbf else {
+            "elements": elements,
+            "nodes": nodes,
+            "way_refs": way_refs,
+            "rel_members": rel_members,
+        }
         # per-ring coordinate arrays for ALL geometry-bearing relations,
         # persisted once by cache_relation_geometry() — the reusable
         # bronze step behind relation_areas()/relation_lines()/query()
@@ -84,66 +107,36 @@ class OSM:
         # (relation-of-relations geometry)?  None = not yet probed
         self._has_nested_members: Optional[bool] = None
 
-    # -- lazy bronze relations (pbf-backed OSMs build on first access) -----
+    # -- bronze tables (pbf-backed OSMs read the shared decoded scan) ------
+
+    def _pbf_split(self) -> "tuple[DataFrame, dict]":
+        """(scan, frames) of a PBF-backed OSM: the four bronze tables by
+        name, plus ``_elements_for``'s per-shape projections.  The scan
+        lookup re-persists a dropped cache; the frames are rebuilt only
+        when the lookup returns another scan (the file changed)."""
+        scan = _pbf_scan(*self._pbf)
+        if self._split is None or self._split[0] is not scan:
+            self._split = (scan, bronze_tables(scan))
+        return self._split
+
+    def _table(self, name: str) -> Optional[DataFrame]:
+        return self._tables[name] if self._pbf is None else self._pbf_split()[1][name]
 
     @property
     def elements(self) -> DataFrame:
-        if self._elements is None and self._pbf_meta is not None:
-            spark, path = self._pbf_meta
-            from osmdatapy_spark.sources.pbf import read_pbf
-
-            self._elements = read_pbf(spark, path).select(
-                "osmid", "osmtype", "tags", "refs", "members",
-                "version", "timestamp", "changeset",
-            )
-        return self._elements
+        return self._table("elements")
 
     @property
     def nodes(self) -> DataFrame:
-        if self._nodes is None and self._pbf_meta is not None:
-            spark, path = self._pbf_meta
-            from osmdatapy_spark.sources.pbf import read_pbf
-
-            self._nodes = read_pbf(
-                spark, path, osmtypes={0}, columns=["osmid", "lon", "lat"]
-            )
-        return self._nodes
+        return self._table("nodes")
 
     @property
     def way_refs(self) -> Optional[DataFrame]:
-        if self._way_refs is None and self._pbf_meta is not None:
-            spark, path = self._pbf_meta
-            from pyspark.sql import functions as F
-
-            from osmdatapy_spark.sources.pbf import read_pbf
-
-            self._way_refs = (
-                read_pbf(spark, path, osmtypes={1}, columns=["osmid", "refs"])
-                .select("osmid", F.posexplode("refs").alias("pos", "node_id"))
-                .select(col("osmid").alias("way_id"), "pos", "node_id")
-            )
-        return self._way_refs
+        return self._table("way_refs")
 
     @property
     def rel_members(self) -> Optional[DataFrame]:
-        if self._rel_members is None and self._pbf_meta is not None:
-            spark, path = self._pbf_meta
-            from pyspark.sql import functions as F
-
-            from osmdatapy_spark.sources.pbf import read_pbf
-
-            self._rel_members = (
-                read_pbf(spark, path, osmtypes={2}, columns=["osmid", "members"])
-                .select("osmid", F.posexplode("members").alias("pos", "m"))
-                .select(
-                    col("osmid").alias("rel_id"),
-                    "pos",
-                    col("m.ref").alias("member_id"),
-                    col("m.type").alias("member_type"),
-                    col("m.role").alias("role"),
-                )
-            )
-        return self._rel_members
+        return self._table("rel_members")
 
     # -- constructors ------------------------------------------------------
 
@@ -159,11 +152,13 @@ class OSM:
 
     @classmethod
     def from_pbf(cls, spark: SparkSession, path: str) -> "OSM":
-        """Open a ``.osm.pbf`` through the custom data source
-        (reference entry point ``OSM(filepath)``, osmdata.py:29-39).
-        Bronze relations construct lazily on first access — a ways-only
-        query never pays for the rel_members relation's driver-side
-        setup, let alone its decode."""
+        """Open a ``.osm.pbf`` (reference entry point ``OSM(filepath)``,
+        osmdata.py:29-39).  The file is decoded once per session into a
+        persisted scan that every table and query of every ``OSM`` on the
+        same unchanged file reads (see the module docstring).  The cache
+        is MEMORY_AND_DISK: it fits while the decoded elements fit in
+        executor storage memory plus local disk; beyond that, write bronze
+        parquet with ``read_pbf_tables`` and open it with ``from_bronze``."""
         return cls(path, spark=spark)
 
     @classmethod
@@ -173,32 +168,10 @@ class OSM:
         split into the four bronze tables post-scan (XML has no per-kind
         wire pruning; it is the interchange format, so files are small —
         bulk data belongs in PBF or bronze parquet)."""
-        from pyspark.sql import functions as F
-
         from osmdatapy_spark.sources.xml import read_osm_xml
 
-        df = read_osm_xml(spark, path)
-        elements = df.select(
-            "osmid", "osmtype", "tags", "refs", "members", "version", "timestamp", "changeset"
-        )
-        nodes = df.filter(col("osmtype") == 0).select("osmid", "lon", "lat")
-        way_refs = (
-            df.filter(col("osmtype") == 1)
-            .select("osmid", F.posexplode("refs").alias("pos", "node_id"))
-            .select(col("osmid").alias("way_id"), "pos", "node_id")
-        )
-        rel_members = (
-            df.filter(col("osmtype") == 2)
-            .select("osmid", F.posexplode("members").alias("pos", "m"))
-            .select(
-                col("osmid").alias("rel_id"),
-                "pos",
-                col("m.ref").alias("member_id"),
-                col("m.type").alias("member_type"),
-                col("m.role").alias("role"),
-            )
-        )
-        return cls(elements, nodes, way_refs, rel_members)
+        t = bronze_tables(read_osm_xml(spark, path))
+        return cls(t["elements"], t["nodes"], t["way_refs"], t["rel_members"])
 
     # -- bronze persistence (SCALE.md: "what would change first") ----------
 
@@ -273,10 +246,6 @@ class OSM:
         the spec-default 1000 ms date granularity; missing values write
         as 0) — the archival/history workflows' wire format.
         """
-        import os
-
-        from pyspark.sql import functions as F
-
         os.makedirs(path, exist_ok=True)
         # the Info columns: real values when metadata round-trip is on,
         # null placeholders otherwise (uniform row schema either way)
@@ -422,28 +391,23 @@ class OSM:
     # -- the main query path (reference osmdata.py:183-206) ----------------
 
     def _elements_for(self, q: Query, only: "set[int] | None" = None) -> DataFrame:
-        """Elements relation for a query, kind-pruned at the SOURCE when
-        this OSM was opened from a .pbf path (P2 block pruning, reference
-        osmdata.py:140-168 block-kind skip): a ways-only query never
-        decodes the dense-node wire data at all — each pruned scan is a
-        fresh reader instance so pushed osmtype sets can't clobber each
-        other (see read_pbf_tables).  Falls back to the shared elements
-        relation (post-decode Catalyst filter) for table-backed OSMs,
-        where parquet row-group stats do the same pruning."""
+        """Elements of the kinds ``q`` selects (``only`` overrides), with
+        the columns its pipeline reads.
+
+        On a PBF-backed OSM this is a filter and projection of the
+        decoded-once scan: node rows carry lon/lat inline (no coordinate
+        join), ways their refs, relations their members, and metadata
+        columns appear only for metadata queries — the same columns the
+        per-kind source relations gave.  Table-backed OSMs, and queries of
+        all three kinds, read the shared elements table; parquet row-group
+        statistics do the kind pruning there."""
         wanted = only if only is not None else {
             t
             for t, on in ((0, q.nodes), (1, q.ways), (2, q.relations))
             if on
         }
-        if self._pbf_meta is None or not wanted or len(wanted) == 3:
+        if self._pbf is None or not wanted or len(wanted) == 3:
             return self.elements
-        spark, path = self._pbf_meta
-        from osmdatapy_spark.sources.pbf import read_pbf
-
-        # field-decode pruning rides the same relation options: a query
-        # without metadata=True never parses Info blobs, a nodes-less
-        # query never delta-accumulates refs, etc. (the 'columns' option —
-        # a .select() above a Python-DS scan cannot prune, see read_pbf)
         cols = ["osmid", "osmtype", "tags"]
         if 0 in wanted:
             cols += ["lon", "lat"]
@@ -453,31 +417,13 @@ class OSM:
             cols.append("members")
         if q.metadata:
             cols += ["version", "timestamp", "changeset"]
-        # dictionary skip (reference P2): Query.must_tags means "element
-        # carries at least ONE of these keys", so blocks whose string
-        # table contains NONE of them cannot contribute — push the keys
-        # as the disjunctive any_tag_keys option and the executor bails
-        # right after each block's stringtable decode.  With
-        # keep_first=True (the constructor default) the keep table is
-        # equally mandatory (pred = must & kps & ~exs), so its KEYS are
-        # a valid any-of condition too; under keep_first=False keep is
-        # advisory (~exs | kps) and must NOT prune.  Safe because
-        # q.apply()'s tag predicate re-filters the surviving rows, and
-        # member/coordinate attachment reads the bronze scans, never this
-        # one.  (Comma is the option separator, so a pathological key
-        # containing one skips the optimization, not correctness.)
-        any_keys = None
-        if q.must_tags and not any("," in k for k in q.must_tags):
-            any_keys = set(q.must_tags)
-        elif (
-            q.keep
-            and q.keep_first
-            and not any("," in k for k in q.keep)
-        ):
-            any_keys = set(q.keep)
-        return read_pbf(
-            spark, path, osmtypes=wanted, columns=cols, any_tag_keys=any_keys
-        )
+        scan, tables = self._pbf_split()
+        key = (tuple(sorted(wanted)), tuple(cols))
+        if key not in tables:
+            # memoized with the split: a repeated query shape reuses the
+            # frame instead of re-sending the projection over py4j
+            tables[key] = scan.filter(col("osmtype").isin(*key[0])).select(*cols)
+        return tables[key]
 
     def query(self, q: Query, wkb: bool = False) -> DataFrame:
         """Execute a composable Query → element DataFrame.
@@ -776,10 +722,12 @@ class OSM:
         per-ring coordinate arrays (≤3 exchanges: branch filter + WKT
         assembly).  The persisted unit is relation rings only — a sliver
         of the corpus even at planet scale (where this table would be a
-        written bronze parquet, same contract)."""
+        written bronze parquet, same contract).  One such cache is kept
+        per session: warming another ``OSM`` releases this one if it is
+        materialized, and this ``OSM`` then recomputes the prefix."""
         if self._rel_coords_cache is None:
             coords = self._build_ring_coords(self._relation_kinds())
-            self._rel_coords_cache = coords.persist()
+            self._rel_coords_cache = managed_persist(coords, "engine.relation_geometry")
         return self
 
     def _flatten_way_members(self, kinds: DataFrame, max_depth: int = 8) -> DataFrame:
@@ -918,13 +866,16 @@ class OSM:
             )
         elif len(branches) > 1:
             # one-shot two-branch path: persist the shared gather for THIS
-            # query only.  The split must be PHYSICAL, not just logical:
+            # query only (the next query's persist here releases it once
+            # it is materialized).  The split must be PHYSICAL, not just logical:
             # Spark does not share subtrees across union branches, so
             # without persist each branch would re-run the whole upstream
             # (chain kernel + node join).  The persisted unit is per-ring
             # coordinate arrays — relation rings only, a sliver of the
             # corpus even at planet scale
-            coords = self._build_ring_coords(kinds).persist()
+            coords = managed_persist(
+                self._build_ring_coords(kinds), "engine.relation_geometries"
+            )
         else:
             # single-branch callers (relation_areas / relation_lines) have
             # exactly one consumer — a persist would only add a cache

@@ -15,14 +15,16 @@ Local testing runs on ``local[N]`` but every setting is chosen for the
 
 This module is also the one home of driver-side state that belongs to a
 session or a JVM.  Table and spread-table handles, parsed SQL
-expressions, the way-geometry Column, the PBF source registration and
-persisted intermediate frames all live in one store, keyed by the live
-owner object: the ``SparkSession`` for session-bound handles, the
-``SparkContext`` for JVM-bound expressions.  The key holds the object,
-so its identity cannot be reused while the entry exists; entries of
-stopped owners are pruned on the next miss, and a session's first miss
-applies ``tune_session``.  The entries are plan handles, not data: every
-action still computes from its inputs.
+expressions, the way-geometry Column, the PBF source registration, the
+decoded-once scan of each opened PBF and persisted intermediate frames
+all live in one store, keyed by the live owner object: the
+``SparkSession`` for session-bound handles, the ``SparkContext`` for
+JVM-bound expressions.  The key holds the object, so its identity cannot
+be reused while the entry exists; entries of stopped owners are pruned
+on the next miss, and a session's first miss applies ``tune_session``.
+The entries are plan handles, not data: the only data kept across
+actions are the caches of persisted frames, held by Spark's cache
+manager.
 
 Contract:
 
@@ -31,14 +33,17 @@ Contract:
   called for its directory;
 - a frame persisted with ``managed_persist(df, key)`` lives until its
   cache is materialized and the same call site persists again (or
-  ``release`` drops it).
+  ``release`` drops it);
+- a frame shared with ``shared_persist(spark, slot, version, build)`` is
+  built and persisted once per content version of its input, and is
+  persisted again on the next call after its cache was dropped.
 """
 
 from __future__ import annotations
 
 import os
 import threading
-from typing import Any, Callable, TypeVar
+from typing import Any, Callable, Hashable, TypeVar
 
 from py4j.protocol import Py4JError
 from pyspark import SparkContext, StorageLevel
@@ -186,6 +191,20 @@ def _materialized(cache_manager: Any, df: DataFrame) -> bool | None:
         return None  # session stopped
 
 
+def _persist_handles(spark: SparkSession) -> tuple[Any, Any]:
+    """The JVM cache manager and the MEMORY_AND_DISK_DESER storage level.
+    They cost 2 + 10 py4j round trips to look up; once per session keeps a
+    persist at one round trip."""
+    return memo(
+        spark,
+        ("persist",),
+        lambda: (
+            spark._jsparkSession.sharedState().cacheManager(),
+            spark._sc._getJavaStorageLevel(StorageLevel.MEMORY_AND_DISK_DESER),
+        ),
+    )
+
+
 def managed_persist(df: DataFrame, key: str) -> DataFrame:
     """Persist ``df`` (MEMORY_AND_DISK_DESER, as ``DataFrame.persist``)
     under the call-site ``key``.
@@ -198,20 +217,13 @@ def managed_persist(df: DataFrame, key: str) -> DataFrame:
     per key).  Releasing a materialized frame is always safe: a caller
     that still holds it simply recomputes its lineage."""
     spark = df.sparkSession
-    # the JVM cache manager and storage level cost 2 + 10 py4j round trips
-    # to look up; once per session keeps a persist at one round trip
-    cache_manager, level = memo(
-        spark,
-        ("persist",),
-        lambda: (
-            spark._jsparkSession.sharedState().cacheManager(),
-            spark._sc._getJavaStorageLevel(StorageLevel.MEMORY_AND_DISK_DESER),
-        ),
-    )
+    cache_manager, level = _persist_handles(spark)
     frames = memo(spark, ("persisted", key), list)
     with _LOCK:
         pending = []
         for prev in frames:
+            if prev is df:
+                continue  # persisted again after its cache was dropped
             loaded = _materialized(cache_manager, prev)
             if loaded is False:
                 pending.append(prev)
@@ -222,6 +234,35 @@ def managed_persist(df: DataFrame, key: str) -> DataFrame:
         frames[:] = pending + [df]
     df.is_cached = True
     df._jdf.persist(level)
+    return df
+
+
+def shared_persist(
+    spark: SparkSession, slot: str, version: Hashable, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The frame ``build`` returns for ``slot`` at ``version``, persisted
+    once and shared by every caller in ``spark``.
+
+    ``slot`` names the input (a resolved path) and ``version`` its current
+    content signature.  The first call at a version builds the frame and
+    persists it with ``managed_persist(df, slot)``, so the frame of an
+    earlier version is released there once its cache is materialized, and
+    the earlier version's entry is forgotten.  Every call checks that the
+    cache still exists (two py4j round trips) and persists the frame again
+    if it was dropped (``spark.catalog.clearCache()``, ``release``):
+    without that, each later action would recompute the whole lineage."""
+    df = memo(spark, (slot, "shared", version), build)
+    with _LOCK:
+        entries = _STATE[spark]
+        for k in [k for k in entries if k[:2] == (slot, "shared") and k[2] != version]:
+            del entries[k]
+    cache_manager, _ = _persist_handles(spark)
+    try:
+        dropped = cache_manager.lookupCachedData(df._jdf).isEmpty()
+    except Py4JError:
+        dropped = True  # session stopped: the persist below reports it
+    if dropped:
+        managed_persist(df, slot)
     return df
 
 

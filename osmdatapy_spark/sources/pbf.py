@@ -30,7 +30,7 @@ file becomes an ordinary DataFrame scan —
   field-decode pruning (``primitives.py:23-29``).
 
 The unified row shape is SURVEY.md §1.5's element model: one table, all
-three kinds, map tags, array refs/members.  ``read_pbf_tables`` splits it
+three kinds, map tags, array refs/members.  ``bronze_tables`` splits it
 into the four bronze tables the engine operates on.
 
 Usage::
@@ -42,7 +42,7 @@ Usage::
 from __future__ import annotations
 
 import os
-from typing import Iterator, Sequence
+from typing import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -152,6 +152,35 @@ def _probe_dictionaries(
     return out
 
 
+def expand_pbf_paths(path: str) -> list[str]:
+    """The files a ``path`` option reads.  A directory reads every
+    ``*.pbf`` inside (sorted — deterministic partition order), a glob
+    pattern expands, a plain path stays itself.  The multi-extract case is
+    how real deployments store regional downloads (one .osm.pbf per
+    region); ids are globally unique across OSM extracts, so a
+    union-of-files scan is semantically a bigger extract."""
+    import glob
+
+    if os.path.isdir(path):
+        # skip hidden dotfiles (macOS AppleDouble '._x.osm.pbf' sidecars
+        # end with .pbf but hold resource-fork bytes that would crash
+        # the framing scan — same rationale as sources/_watch.py)
+        files = sorted(
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if f.endswith(".pbf") and not f.startswith(".")
+        )
+        if not files:
+            raise ValueError(f"no .pbf files in directory {path}")
+        return files
+    if any(c in path for c in "*?["):
+        files = sorted(glob.glob(path))
+        if not files:
+            raise ValueError(f"glob {path!r} matched no files")
+        return files
+    return [path]
+
+
 class PbfPartition(InputPartition):
     """One read task = a RUN of adjacent OSMData blobs.
 
@@ -240,38 +269,9 @@ class PbfDataSourceReader(DataSourceReader):
         reuse (see module docstring for the wrong-results hazard)."""
         yield from filters
 
-    def _expand_paths(self) -> list[str]:
-        """Multi-file inputs: a directory reads every ``*.pbf`` inside
-        (sorted — deterministic partition order), a glob pattern expands,
-        a plain path stays itself.  The multi-extract case is how real
-        deployments store regional downloads (one .osm.pbf per region);
-        ids are globally unique across OSM extracts, so a union-of-files
-        scan is semantically a bigger extract."""
-        import glob
-        import os
-
-        if os.path.isdir(self.path):
-            # skip hidden dotfiles (macOS AppleDouble '._x.osm.pbf' sidecars
-            # end with .pbf but hold resource-fork bytes that would crash
-            # the framing scan — same rationale as sources/_watch.py)
-            files = sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if f.endswith(".pbf") and not f.startswith(".")
-            )
-            if not files:
-                raise ValueError(f"no .pbf files in directory {self.path}")
-            return files
-        if any(c in self.path for c in "*?["):
-            files = sorted(glob.glob(self.path))
-            if not files:
-                raise ValueError(f"glob {self.path!r} matched no files")
-            return files
-        return [self.path]
-
     def partitions(self) -> Sequence[PbfPartition]:
         out: list[PbfPartition] = []
-        for path in self._expand_paths():
+        for path in expand_pbf_paths(self.path):
             spans = scan_blob_spans(path)
             if self.validate:
                 headers = [s for s in spans if s.blob_type == "OSMHeader"]
@@ -729,47 +729,56 @@ def read_pbf_stream(
     return reader.load(path)
 
 
-def read_pbf_tables(spark: SparkSession, path: str) -> dict[str, DataFrame]:
-    """Split the unified scan into the engine's bronze tables (SURVEY §1.5):
+def bronze_tables(
+    scan: DataFrame, of_kind: "Callable[[int, list[str]], DataFrame] | None" = None
+) -> dict[str, DataFrame]:
+    """Split a scan in the unified element schema into the engine's bronze
+    tables (SURVEY §1.5):
 
-    - ``elements(osmid, osmtype, tags, version, timestamp, changeset)``
+    - ``elements(osmid, osmtype, tags, refs, members, version, timestamp,
+      changeset)``
     - ``nodes(osmid, lon, lat)`` — the reference's geometry cache
       (``osmdata.py:127-133``) as a plain table
     - ``way_refs(way_id, pos, node_id)`` — exploded membership
     - ``rel_members(rel_id, pos, member_id, member_type, role)``
 
-    Each branch gets its OWN relation (a fresh ``read_pbf`` call): filter
-    pushdown is stateful per reader instance, so branches sharing one
-    relation inside one plan would clobber each other's pushed ``osmtype``
-    sets.  Each branch then pushes its own kind filter and pruned columns —
-    the nodes branch never decodes way/relation wire fields.  At scale,
-    persist these as partitioned parquet (bronze) and all downstream
-    queries get parquet-native pruning."""
-    elements = read_pbf(spark, path).select(
-        "osmid", "osmtype", "tags", "refs", "members", "version", "timestamp", "changeset"
-    )
-    nodes = read_pbf(
-        spark, path, osmtypes={0}, columns=["osmid", "lon", "lat"]
-    )
-    way_refs = (
-        read_pbf(spark, path, osmtypes={1}, columns=["osmid", "refs"])
-        .select("osmid", F.posexplode("refs").alias("pos", "node_id"))
-        .select(col("osmid").alias("way_id"), "pos", "node_id")
-    )
-    rel_members = (
-        read_pbf(spark, path, osmtypes={2}, columns=["osmid", "members"])
-        .select("osmid", F.posexplode("members").alias("pos", "m"))
-        .select(
-            col("osmid").alias("rel_id"),
-            "pos",
-            col("m.ref").alias("member_id"),
-            col("m.type").alias("member_type"),
-            col("m.role").alias("role"),
-        )
-    )
+    ``of_kind(kind, columns)`` supplies the rows of one element kind with
+    at least ``columns``; by default they are filtered from ``scan``."""
+    if of_kind is None:
+        def of_kind(kind: int, _columns: list[str]) -> DataFrame:
+            return scan.filter(col("osmtype") == kind)
+
     return {
-        "elements": elements,
-        "nodes": nodes,
-        "way_refs": way_refs,
-        "rel_members": rel_members,
+        "elements": scan.select(
+            "osmid", "osmtype", "tags", "refs", "members", "version", "timestamp", "changeset"
+        ),
+        "nodes": of_kind(0, ["osmid", "lon", "lat"]).select("osmid", "lon", "lat"),
+        "way_refs": (
+            of_kind(1, ["osmid", "refs"])
+            .select("osmid", F.posexplode("refs").alias("pos", "node_id"))
+            .select(col("osmid").alias("way_id"), "pos", "node_id")
+        ),
+        "rel_members": (
+            of_kind(2, ["osmid", "members"])
+            .select("osmid", F.posexplode("members").alias("pos", "m"))
+            .select(
+                col("osmid").alias("rel_id"),
+                "pos",
+                col("m.ref").alias("member_id"),
+                col("m.type").alias("member_type"),
+                col("m.role").alias("role"),
+            )
+        ),
     }
+
+
+def read_pbf_tables(spark: SparkSession, path: str) -> dict[str, DataFrame]:
+    """The bronze tables of a .pbf (``bronze_tables``), uncached, each
+    element kind read through its own kind-pruned relation: the nodes
+    table never decodes way/relation wire data.  This is the streaming
+    form for writing bronze from an input too big to cache; ``OSM.from_pbf``
+    instead decodes once into a persisted scan and splits that."""
+    return bronze_tables(
+        read_pbf(spark, path),
+        lambda kind, columns: read_pbf(spark, path, osmtypes={kind}, columns=columns),
+    )

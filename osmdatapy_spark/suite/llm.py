@@ -36,7 +36,7 @@ from osmdatapy_spark.functions.text import (
     tokens,
     word_shingles,
 )
-from osmdatapy_spark.session import managed_persist
+from osmdatapy_spark.session import managed_persist, release
 from osmdatapy_spark.suite._util import T, TS
 from osmdatapy_spark.suite.registry import register
 
@@ -1812,13 +1812,16 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table (unique-token corpora) carrying it through the persist is
     # the difference between fitting and an aggregation OOM (found by
     # tools/corpus_scale_check.py at 1M docs / 40M distinct words)
-    base = words.select(
-        "f",
-        F.transform(
-            F.sequence(lit(1), F.length("w")),
-            lambda i: F.substring(col("w"), i, lit(1)),
-        ).alias("s"),
-    ).persist()
+    base = managed_persist(
+        words.select(
+            "f",
+            F.transform(
+                F.sequence(lit(1), F.length("w")),
+                lambda i: F.substring(col("w"), i, lit(1)),
+            ).alias("s"),
+        ),
+        "bpe_train.base",
+    )
     syms = base
     merges = []
     for r in range(1, _BPE_ROUNDS + 1):
@@ -1848,7 +1851,7 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         syms = syms.select(
             "f", _bpe_merge_apply(col("s"), best["l"], best["r2"]).alias("s")
         )
-    base.unpersist()
+    release("bpe_train.base")
     return spark.createDataFrame(
         merges, "merge_round bigint, left_sym string, right_sym string, cnt bigint"
     )

@@ -307,21 +307,20 @@ def test_to_pbf_roundtrip(spark, fixture_pbf, tmp_path):
     assert got_m == want_m
 
 
-def test_query_on_path_backed_osm_uses_kind_pruned_scan(spark, fixture_pbf):
-    """A ways-only query on an OSM opened from a .pbf path must re-derive
-    its elements relation with the osmtypes option pushed to the source
-    (P2 block pruning end-to-end) — and still return identical rows to
-    the unpruned table-backed pipeline."""
+def test_query_on_path_backed_osm_reads_shared_scan(spark, fixture_pbf):
+    """A ways-only query on an OSM opened from a .pbf path reads its
+    elements as a kind filter over the session's decoded-once scan (no
+    per-query source relation) — and still returns identical rows to the
+    table-backed pipeline."""
     from osmdatapy_spark.engine import OSM
     from osmdatapy_spark.query import Query
 
     osm = OSM.from_pbf(spark, fixture_pbf)
     q = Query(ways=True, nodes=False, relations=False)
     pruned = osm._elements_for(q)
-    # the pruned relation is a fresh scan, not the shared 3-kind elements
-    assert pruned is not osm.elements
-    assert "osmtypes -> 1" in pruned._jdf.queryExecution().toString() or \
-        pruned.count() == osm.elements.filter(col("osmtype") == 1).count()
+    assert "InMemoryRelation" in pruned._jdf.queryExecution().optimizedPlan().toString()
+    assert {r["osmtype"] for r in pruned.select("osmtype").distinct().collect()} == {1}
+    assert pruned.columns == ["osmid", "osmtype", "tags", "refs"]
     # end-to-end equality against the post-decode-filter pipeline
     table_backed = OSM.from_tables(osm.elements, osm.nodes, osm.way_refs, osm.rel_members)
     a = sorted(r["osmid"] for r in osm.query(q).collect())

@@ -36,6 +36,63 @@ def test_session_state_lives_only_in_session_py():
     assert not offenders, "session/JVM-keyed state outside session.py:\n" + "\n".join(offenders)
 
 
+# the two raw persists the guard below allows, by enclosing function: the
+# user-facing materialization point, and a persist/unpersist pair that
+# never leaves its function
+_RAW_PERSIST_ALLOWED = {
+    ("osmdatapy_spark/curate.py", "Curate.persist"),
+    ("osmdatapy_spark/functions/similarity.py", "kmeans_centroids"),
+}
+
+
+def _raw_persists(path: Path) -> list[tuple[str, int]]:
+    """(enclosing function, line) of each ``.persist(...)``/``.cache()``
+    call in ``path``."""
+    import ast
+
+    found: list[tuple[str, int]] = []
+
+    def visit(node: ast.AST, scope: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                visit(child, f"{scope}.{child.name}" if scope else child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("persist", "cache")
+            ):
+                found.append((scope, child.lineno))
+            visit(child, scope)
+
+    visit(ast.parse(path.read_text()), "")
+    return found
+
+
+def test_persists_go_through_session_py():
+    """Every frame the package persists is registered in session.py
+    (``managed_persist``/``shared_persist``), so repeated calls release
+    what earlier calls persisted; a raw ``.persist()``/``.cache()`` outside
+    it leaks one cached frame per call.  Only the allow-listed sites may
+    persist directly."""
+    pkg = REPO / "osmdatapy_spark"
+    offenders = [
+        f"{rel}:{line}: in {scope or '<module>'}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "session.py"
+        for rel in [str(path.relative_to(REPO))]
+        for scope, line in _raw_persists(path)
+        if (rel, scope) not in _RAW_PERSIST_ALLOWED
+    ]
+    assert not offenders, "raw persist outside session.py:\n" + "\n".join(offenders)
+    allowed = {
+        (str(path.relative_to(REPO)), scope)
+        for path in pkg.rglob("*.py")
+        for scope, _ in _raw_persists(path)
+    }
+    assert _RAW_PERSIST_ALLOWED <= allowed, "stale allow-list entry"
+
+
 _RESTART_SCRIPT = """
 import sys
 from osmdatapy_spark import session
