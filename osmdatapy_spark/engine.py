@@ -12,12 +12,25 @@ Elements carry a ``tags`` map, node coordinates are the ``nodes`` table
 (SURVEY.md §1.5), and "querying" is a filter/projection pipeline
 Catalyst optimizes.
 
-Lifetime of the decoded scan: it is keyed by the resolved path and by the
-name, size and ``mtime_ns`` of every file the path expands to, so a file
-rewritten in place is decoded afresh on its next access, and the old
-cache is released when the new one is persisted.  A cache dropped by
-``spark.catalog.clearCache()`` or ``session.release`` is persisted again
-on the next access.
+Geometry is assembled once per file version too.  Two more frames are
+derived from the cached scan by the table-backed pipelines and persisted
+the same way when a query first needs them: ``way_coords(osmid,
+coords)``, the ordered coordinates of every way, and
+``relation_geometry(rel_id, kind, wkt)``, the area or line WKT of every
+geometry-bearing relation.  A geometry query joins or filters them
+instead of re-running the coordinate gather, the ring-chain kernel and
+the polygon assembly.  Geometry per way and per relation does not depend
+on which other rows a query selects, so reading the whole-file frames
+gives the same rows as assembling per query.
+
+Lifetime of the three frames: they are keyed by the resolved path and by
+the name, size and ``mtime_ns`` of every file the path expands to, all
+from one stat pass per table access, so a file rewritten in place is
+decoded and assembled afresh on its next access, and an old version's
+frame is released when the new version's frame of the same kind is
+persisted.  A frame dropped by ``spark.catalog.clearCache()`` or
+``session.release`` is persisted again on its next access, from the
+scan's cache.
 
 Construction paths:
 - ``OSM.from_tables(elements, nodes, ...)`` — any DataFrames in the §1.5
@@ -51,16 +64,30 @@ from osmdatapy_spark.session import managed_persist, shared_persist
 from osmdatapy_spark.sources.pbf import bronze_tables, expand_pbf_paths, read_pbf
 
 
-def _pbf_scan(spark: SparkSession, path: str) -> DataFrame:
+def _pbf_scan(spark: SparkSession, path: str) -> "tuple[DataFrame, str, tuple]":
     """The session's decoded-once, persisted full-schema scan of the PBF
-    input at ``path``, keyed by content (see the module docstring)."""
+    input at ``path``, keyed by content (see the module docstring), with
+    the slot and version it is keyed by."""
     resolved = os.path.realpath(path)
     version = tuple(
         (f, st.st_size, st.st_mtime_ns)
         for f in expand_pbf_paths(resolved)
         for st in (os.stat(f),)
     )
-    return shared_persist(spark, resolved, version, lambda: read_pbf(spark, resolved))
+    scan = shared_persist(spark, resolved, version, lambda: read_pbf(spark, resolved))
+    return scan, resolved, version
+
+
+def _derive_geometry(name: str, t: dict) -> DataFrame:
+    """A geometry frame of one PBF version, built by the table-backed
+    pipelines over the bronze tables ``t`` of its cached scan:
+    ``way_coords(osmid, coords)`` of every way, or
+    ``relation_geometry(rel_id, kind, wkt)`` of every geometry-bearing
+    relation (whose nested-member probe then runs once per version)."""
+    base = OSM.from_tables(t["elements"], t["nodes"], t["way_refs"], t["rel_members"])
+    if name == "way_coords":
+        return base._refs_coords(t["elements"].filter(col("osmtype") == OSMTYPE_WAY))
+    return base._relation_geometry_frame()
 
 
 class OSM:
@@ -99,24 +126,37 @@ class OSM:
             "way_refs": way_refs,
             "rel_members": rel_members,
         }
-        # per-ring coordinate arrays for ALL geometry-bearing relations,
-        # persisted once by cache_relation_geometry() — the reusable
-        # bronze step behind relation_areas()/relation_lines()/query()
-        self._rel_coords_cache: Optional[DataFrame] = None
-        # memoized probe: does rel_members contain relation-type members
-        # (relation-of-relations geometry)?  None = not yet probed
+        # (rel_id, kind, wkt) of ALL geometry-bearing relations of a
+        # table-backed OSM, persisted once by cache_relation_geometry() —
+        # the reusable bronze step behind relation_areas()/
+        # relation_lines()/query() (PBF-backed OSMs read their version's)
+        self._rel_geom_cache: Optional[DataFrame] = None
+        # memoized probe of the (fixed) tables: does rel_members contain
+        # relation-type members (relation-of-relations geometry)?
+        # None = not yet probed
         self._has_nested_members: Optional[bool] = None
 
     # -- bronze tables (pbf-backed OSMs read the shared decoded scan) ------
 
-    def _pbf_split(self) -> "tuple[DataFrame, dict]":
+    def _pbf_split(self, geometry: Optional[str] = None) -> "tuple[DataFrame, dict]":
         """(scan, frames) of a PBF-backed OSM: the four bronze tables by
         name, plus ``_elements_for``'s per-shape projections.  The scan
         lookup re-persists a dropped cache; the frames are rebuilt only
-        when the lookup returns another scan (the file changed)."""
-        scan = _pbf_scan(*self._pbf)
+        when the lookup returns another scan (the file changed).
+
+        ``geometry`` ("way_coords" or "relation_geometry") adds that
+        derived frame under its name: shared and persisted per file
+        version like the scan, keyed by the version of the same stat pass,
+        and built from the cached scan (``_derive_geometry``)."""
+        spark = self._pbf[0]
+        scan, slot, version = _pbf_scan(*self._pbf)
         if self._split is None or self._split[0] is not scan:
             self._split = (scan, bronze_tables(scan))
+        frames = self._split[1]
+        if geometry is not None:
+            frames[geometry] = shared_persist(
+                spark, f"{slot}\0{geometry}", version, lambda: _derive_geometry(geometry, frames)
+            )
         return self._split
 
     def _table(self, name: str) -> Optional[DataFrame]:
@@ -155,10 +195,15 @@ class OSM:
         """Open a ``.osm.pbf`` (reference entry point ``OSM(filepath)``,
         osmdata.py:29-39).  The file is decoded once per session into a
         persisted scan that every table and query of every ``OSM`` on the
-        same unchanged file reads (see the module docstring).  The cache
-        is MEMORY_AND_DISK: it fits while the decoded elements fit in
-        executor storage memory plus local disk; beyond that, write bronze
-        parquet with ``read_pbf_tables`` and open it with ``from_bronze``."""
+        same unchanged file reads, and the first geometry query that needs
+        them derives ``way_coords`` and ``relation_geometry`` from that
+        scan and persists them next to it: three frames per file version,
+        shared by every ``OSM`` on it, released when the file is rewritten
+        and persisted again after ``clearCache()`` (see the module
+        docstring).  The caches are MEMORY_AND_DISK: they fit while the
+        decoded elements and way coordinates fit in executor storage
+        memory plus local disk; beyond that, write bronze parquet with
+        ``read_pbf_tables`` and open it with ``from_bronze``."""
         return cls(path, spark=spark)
 
     @classmethod
@@ -448,22 +493,24 @@ class OSM:
             if q.relations and self.rel_members is not None:
                 # relation geometry (G5 dispatch): areas for
                 # type ∈ {multipolygon, boundary}, linestrings for
-                # type=route — ONE shared chaining pipeline, one left join
-                # (reference _frame.py:87-105).  Assembly is scoped to the
-                # relations the query SELECTS (semi-join on the filtered
-                # element ids): a planet-scale query for bus routes must
-                # not chain every multipolygon's member ways — the probe
-                # side is the post-filter relation set, which AQE
-                # broadcasts when small
-                kept = (
-                    q.apply(self._elements_for(q, only={OSMTYPE_RELATION}))
-                    .filter(col("osmtype") == OSMTYPE_RELATION)
-                    .select(col("osmid").alias("rel_id"))
-                )
-                kinds = self._relation_kinds().join(kept, "rel_id", "left_semi")
-                rel_geoms = self._relation_geometries(kinds).select(
-                    col("rel_id").alias("_arid"), col("wkt").alias("_awkt")
-                )
+                # type=route, one left join (reference _frame.py:87-105).
+                # A cached whole-file frame is joined as it is: the left
+                # join keeps only the selected relations
+                geoms = self._relation_geometry()
+                if geoms is None:
+                    # ONE shared chaining pipeline, scoped to the relations
+                    # the query SELECTS (semi-join on the filtered element
+                    # ids): a planet-scale query for bus routes must not
+                    # chain every multipolygon's member ways — the probe
+                    # side is the post-filter relation set, which AQE
+                    # broadcasts when small
+                    kept = (
+                        q.apply(self._elements_for(q, only={OSMTYPE_RELATION}))
+                        .filter(col("osmtype") == OSMTYPE_RELATION)
+                        .select(col("osmid").alias("rel_id"))
+                    )
+                    geoms = self._relation_geometries(kept=kept)
+                rel_geoms = geoms.select(col("rel_id").alias("_arid"), col("wkt").alias("_awkt"))
                 out = out.join(
                     rel_geoms,
                     (col("osmtype") == OSMTYPE_RELATION) & (col("osmid") == col("_arid")),
@@ -525,8 +572,8 @@ class OSM:
         """Node/way geometry attachment, gated on the query's element kinds:
         a relation-only query joins neither the nodes table nor way refs —
         those joins would be row-free work (the kind filter already ran in
-        ``q.apply``), and every skipped join is a skipped exchange."""
-        nodes = self.nodes
+        ``q.apply``), and every skipped join is a skipped exchange.  A
+        PBF-backed OSM joins its version's cached ``way_coords``."""
         # elements may carry refs inline (PBF scan) or only via the exploded
         # way_refs table (bronze-tier fixtures) — attach arrays on demand
         if q.ways and "refs" not in out.columns and self.way_refs is not None:
@@ -543,7 +590,7 @@ class OSM:
                 # J6 join needed at all
                 pass
             else:
-                pts = nodes.select(col("osmid").alias("_nid"), "lon", "lat")
+                pts = self.nodes.select(col("osmid").alias("_nid"), "lon", "lat")
                 # node points (reference J6/G1, _frame.py:44-52); osmid is
                 # NOT unique across element kinds, so the join is
                 # osmtype-gated — a way whose id collides with a node id
@@ -564,7 +611,10 @@ class OSM:
             )
         out = out.withColumn("geom_type", gt)
         if q.ways and "refs" in out.columns:
-            coords = self._refs_coords(out.filter(col("osmtype") == OSMTYPE_WAY))
+            if self._pbf is not None:
+                coords = self._pbf_split("way_coords")[1]["way_coords"]
+            else:
+                coords = self._refs_coords(out.filter(col("osmtype") == OSMTYPE_WAY))
             out = out.join(coords, "osmid", "left")
             line = linestring_wkt(col("coords"))
             out = out.withColumn(
@@ -701,34 +751,49 @@ class OSM:
     def relation_areas(self) -> DataFrame:
         """(rel_id, wkt) POLYGON/MULTIPOLYGON for type ∈ {multipolygon,
         boundary} relations (reference ``_frame.py:107-179``)."""
-        return self._relation_geometries(
-            self._relation_kinds(line=False), branches=("area",)
-        )
+        return self._relation_geometries(("area",))
 
     def relation_lines(self) -> DataFrame:
         """(rel_id, wkt) LINESTRING/MULTILINESTRING for type=route
         relations (reference line branch ``_frame.py:87-105``)."""
-        return self._relation_geometries(
-            self._relation_kinds(area=False), branches=("line",)
-        )
+        return self._relation_geometries(("line",))
 
     def cache_relation_geometry(self) -> "OSM":
-        """Materialize the chain/gather pipeline for ALL geometry-bearing
-        relations as a persisted bronze table (like ``to_bronze`` for the
-        element tables): the G6 chain kernel + node-coordinate join — the
-        expensive 9-of-12-exchanges prefix of every relation-geometry
-        query — runs ONCE, and every later ``relation_areas()`` /
-        ``relation_lines()`` / geometry ``query()`` reads the persisted
-        per-ring coordinate arrays (≤3 exchanges: branch filter + WKT
-        assembly).  The persisted unit is relation rings only — a sliver
-        of the corpus even at planet scale (where this table would be a
-        written bronze parquet, same contract).  One such cache is kept
-        per session: warming another ``OSM`` releases this one if it is
-        materialized, and this ``OSM`` then recomputes the prefix."""
-        if self._rel_coords_cache is None:
-            coords = self._build_ring_coords(self._relation_kinds())
-            self._rel_coords_cache = managed_persist(coords, "engine.relation_geometry")
+        """Materialize the geometry of ALL geometry-bearing relations as
+        a persisted ``(rel_id, kind, wkt)`` bronze table (like
+        ``to_bronze`` for the element tables): the G6 chain kernel, the
+        node-coordinate join and the polygon/line assembly run ONCE, and
+        every later ``relation_areas()`` / ``relation_lines()`` / geometry
+        ``query()`` filters the persisted table.  The persisted unit is
+        one WKT per relation — a sliver of the corpus even at planet scale
+        (where this table would be a written bronze parquet, same
+        contract).  One such cache is kept per session: warming another
+        ``OSM`` releases this one if it is materialized, and this ``OSM``
+        then recomputes the assembly.  A PBF-backed OSM already reads
+        this table, persisted per file version, so there this is a no-op."""
+        if self._pbf is None and self._rel_geom_cache is None:
+            self._rel_geom_cache = managed_persist(
+                self._relation_geometry_frame(), "engine.relation_geometry"
+            )
         return self
+
+    def _relation_geometry(self) -> Optional[DataFrame]:
+        """The cached ``(rel_id, kind, wkt)`` table of every
+        geometry-bearing relation: the file version's on a PBF-backed OSM,
+        ``cache_relation_geometry()``'s on a table-backed one (None before
+        it is warmed)."""
+        if self._pbf is not None:
+            return self._pbf_split("relation_geometry")[1]["relation_geometry"]
+        return self._rel_geom_cache
+
+    def _relation_geometry_frame(self) -> DataFrame:
+        """``(rel_id, kind, wkt)`` of every geometry-bearing relation: one
+        single-branch assembly per kind, so building it persists no
+        intermediate frame (the G5 kinds are disjoint)."""
+        area, line = (
+            self._relation_geometries((b,)).withColumn("kind", lit(b)) for b in ("area", "line")
+        )
+        return area.unionByName(line).select("rel_id", "kind", "wkt")
 
     def _flatten_way_members(self, kinds: DataFrame, max_depth: int = 8) -> DataFrame:
         """(rel_id, way_id, member_pos, role, kind) way membership of each
@@ -755,7 +820,9 @@ class OSM:
             "role",
             "kind",
         )
-        # cheapest sufficient probe, memoized per OSM: scan rel_members
+        # cheapest sufficient probe, memoized per OSM (a PBF-backed OSM
+        # assembles through a table-backed one per file version, see
+        # _derive_geometry, so its probe follows the file): scan rel_members
         # alone (no kinds join — one narrow limit-1 job; Catalyst folds it
         # to a no-op when member_type is a literal) and take the flatten
         # path only when ANY relation-type member exists in the data
@@ -849,22 +916,29 @@ class OSM:
         return self._ring_coords(chains, ["ring_role", "kind"])
 
     def _relation_geometries(
-        self, kinds: DataFrame, branches: tuple = ("area", "line")
+        self, branches: tuple = ("area", "line"), kept: Optional[DataFrame] = None
     ) -> DataFrame:
-        """Relation geometry assembly shared by areas and routes: ONE
+        """(rel_id, wkt) of the geometry-bearing relations of the kinds in
+        ``branches``, restricted to the ``rel_id``s of ``kept`` when given.
+
+        With the ``(rel_id, kind, wkt)`` table cached (every PBF-backed
+        OSM; a table-backed one after ``cache_relation_geometry()``) this
+        filters it by kind and left-semi-joins ``kept``.  Otherwise it is
+        the relation geometry assembly shared by areas and routes: ONE
         member-chaining pipeline (G6 kernel, endpoint join, node-sequence
         expansion), splitting into the polygon ring algebra (G7-G9 + G3)
         and the linestring branch only at WKT assembly — the two types are
-        disjoint by the G5 dispatch, so a unionByName stitches the result.
-
-        With ``cache_relation_geometry()`` warmed, the chain/gather prefix
-        is read from the persisted bronze table (restricted to the
-        requested relations by a left-semi join) instead of recomputed."""
-        if self._rel_coords_cache is not None:
-            coords = self._rel_coords_cache.join(
-                kinds.select("rel_id"), "rel_id", "left_semi"
-            )
-        elif len(branches) > 1:
+        disjoint by the G5 dispatch, so a unionByName stitches the result."""
+        cached = self._relation_geometry()
+        if cached is not None:
+            out = cached.filter(col("kind").isin(*branches))
+            if kept is not None:
+                out = out.join(kept, "rel_id", "left_semi")
+            return out.select("rel_id", "wkt")
+        kinds = self._relation_kinds(area="area" in branches, line="line" in branches)
+        if kept is not None:
+            kinds = kinds.join(kept, "rel_id", "left_semi")
+        if len(branches) > 1:
             # one-shot two-branch path: persist the shared gather for THIS
             # query only (the next query's persist here releases it once
             # it is materialized).  The split must be PHYSICAL, not just logical:

@@ -1,7 +1,9 @@
 """Decode-once contract of a PBF-backed ``OSM``: one persisted full-schema
 scan per file version and session feeds every bronze table and query;
 query outputs equal the per-kind source relations the engine used to build
-for each query."""
+for each query.  Geometry is assembled once per file version too: the
+derived ``way_coords`` and ``relation_geometry`` frames are persisted next
+to the scan, and geometry outputs equal a table-backed ``OSM``'s."""
 
 from __future__ import annotations
 
@@ -12,6 +14,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import Row
 
+from osmdatapy_spark import fixtures
 from osmdatapy_spark.engine import OSM
 from osmdatapy_spark.query import Query
 from osmdatapy_spark.sources.pbf import read_pbf, read_pbf_tables
@@ -20,6 +23,16 @@ from osmdatapy_spark.sources.pbf_codec import PbfWriter
 
 def _scan(osm: OSM):
     return osm._pbf_split()[0]
+
+
+def _geometry(osm: OSM, name: str):
+    """The file version's derived ``way_coords`` or ``relation_geometry``."""
+    return osm._pbf_split(name)[1][name]
+
+
+def _slot(path: str, name: str) -> str:
+    """The session key a derived geometry frame of ``path`` persists under."""
+    return f"{os.path.realpath(path)}\0{name}"
 
 
 def _cached(spark, df) -> bool:
@@ -31,16 +44,20 @@ def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def _run(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _source_scans_outside_cache(df) -> list[str]:
-    """Lines of the executed plan that scan the osmpbf source directly,
-    skipping the subtrees under InMemoryRelation (the plan that filled a
-    cache, printed below the scan that reads it)."""
+def _lines_outside_cache(plan: str) -> list[str]:
+    """Operator lines of a printed physical plan, skipping the subtrees
+    under InMemoryRelation (the plan that filled a cache, printed below
+    the scan that reads it)."""
     found, skip_below = [], None
-    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+    for line in plan.splitlines():
         body = line.lstrip(" :+-")
         depth = len(line) - len(body)
         if skip_below is not None and depth > skip_below:
@@ -48,9 +65,16 @@ def _source_scans_outside_cache(df) -> list[str]:
         skip_below = None
         if body.startswith("InMemoryRelation"):
             skip_below = depth
-        elif "osmpbf" in body:
+        else:
             found.append(body)
     return found
+
+
+def _source_scans_outside_cache(df) -> list[str]:
+    """Lines of the executed plan that scan the osmpbf source directly,
+    outside the cached subtrees."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [line for line in _lines_outside_cache(plan) if "osmpbf" in line]
 
 
 def _write_grid(path: str, n: int) -> None:
@@ -145,6 +169,8 @@ def test_cleared_cache_is_persisted_again(spark, fixture_pbf):
 
 
 def _hashable(v):
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v)
     if isinstance(v, Row):
         return tuple(_hashable(x) for x in v)
     if isinstance(v, dict):
@@ -213,16 +239,22 @@ def test_relation_geometry_persists_do_not_accumulate(spark, fixture_pbf):
 
 
 def test_cache_relation_geometry_persists_through_session(spark, fixture_pbf):
-    """``cache_relation_geometry`` persists under its call-site key, so a
-    session-wide ``release`` drops it like every other managed frame."""
+    """On a PBF-backed OSM ``cache_relation_geometry`` is a no-op: areas
+    already read the file version's ``relation_geometry``, persisted
+    through ``session``, so a session-wide ``release`` drops it like every
+    other managed frame and the next query persists it again."""
     from osmdatapy_spark import session
 
-    osm = OSM.from_pbf(spark, fixture_pbf).cache_relation_geometry()
+    osm = OSM.from_pbf(spark, fixture_pbf)
+    assert osm.cache_relation_geometry() is osm
     want = sorted(tuple(r) for r in osm.relation_areas().collect())
-    assert _cached(spark, osm._rel_coords_cache)
-    session.release("engine.relation_geometry")
-    assert not _cached(spark, osm._rel_coords_cache)
+    geom = _geometry(osm, "relation_geometry")
+    assert _cached(spark, geom)
+    assert "InMemoryTableScan" in osm.relation_areas()._jdf.queryExecution().executedPlan().toString()
+    session.release(_slot(fixture_pbf, "relation_geometry"))
+    assert not _cached(spark, geom)
     assert sorted(tuple(r) for r in osm.relation_areas().collect()) == want
+    assert _cached(spark, geom)
 
 
 def test_scan_of_missing_path_fails_on_access(spark, tmp_path):
@@ -273,3 +305,198 @@ def test_concurrent_opens_share_one_registered_cache(spark, fixture_pbf, tmp_pat
     registered = session._STATE[spark][("persisted", os.path.realpath(path))]
     assert registered == [got[0]]
     assert _cached(spark, got[0])
+
+
+# -- geometry assembled once per file version ---------------------------------
+
+_GEOMETRY_QUERIES = {
+    "highways": Query("highways", geometry=True),
+    "buildings": Query("buildings", geometry=True),
+    "pois": Query("pois", geometry=True),
+    "topology": Query("highways", ways=True, geometry=True, topology=True),
+    "wkb": Query(nodes=True, ways=True, relations=True, geometry=True),
+}
+_GEOMETRY_SHAPES = sorted([*_GEOMETRY_QUERIES, "relation_areas", "relation_lines"])
+
+
+def _geometry_op(osm: OSM, shape: str):
+    if shape in _GEOMETRY_QUERIES:
+        return osm.query(_GEOMETRY_QUERIES[shape], wkb=shape == "wkb")
+    return getattr(osm, shape)()
+
+
+def _write_square(path: str, rels: dict, side: float = 1.0) -> None:
+    """Nodes 1-4 on a square of ``side`` degrees, closed way 10 over them,
+    and multipolygons ``rels`` = {rel_id: [(member_id, member_type, role)]},
+    written atomically."""
+    w = PbfWriter()
+    w.add_dense_nodes(
+        [(1, 0.0, 0.0, {}), (2, side, 0.0, {}), (3, side, side, {}), (4, 0.0, side, {})]
+    )
+    w.add_way(10, [1, 2, 3, 4, 1], {"building": "yes"})
+    for rid, members in rels.items():
+        w.add_relation(rid, members, {"type": "multipolygon"})
+    w.write(path + ".tmp")
+    os.replace(path + ".tmp", path)
+
+
+@pytest.fixture(scope="module")
+def catalog_pbf(tmp_path_factory):
+    """The fixture tables of ``osmdatapy_spark.fixtures`` as a .pbf: every
+    relation shape, including relation 6, whose member is relation 1
+    (relation-of-relations geometry), and a dangling member way."""
+    path = str(tmp_path_factory.mktemp("catalog") / "catalog.osm.pbf")
+    node_ids = sorted(
+        {n for refs in fixtures.WAY_REFS.values() for n in refs}
+        | set(fixtures.NODE_TAGS)
+        | {1, 2, 3, 4}
+    )
+    w = PbfWriter()
+    w.add_dense_nodes(
+        [(i, *fixtures._node_coords(i), fixtures.NODE_TAGS.get(i, {})) for i in node_ids]
+    )
+    for wid, refs in fixtures.WAY_REFS.items():
+        w.add_way(wid, refs, fixtures.WAY_TAGS.get(wid, {}))
+    for rid, tags in fixtures.REL_TAGS.items():
+        members = sorted(m for m in fixtures.REL_MEMBERS if m[0] == rid)
+        w.add_relation(rid, [(mid, mtype, role) for _, _, mid, mtype, role in members], tags)
+    w.write(path)
+    return path
+
+
+def test_warm_geometry_plans_read_the_derived_caches(spark, fixture_pbf):
+    """(a) After the first geometry round, warm highways and buildings
+    geometry queries plan no refs explode, no node-coordinate join and no
+    pandas kernel outside the cached subtrees."""
+    osm = OSM.from_pbf(spark, fixture_pbf)
+    shapes = ("highways", "buildings")
+    for shape in shapes:
+        _run(_geometry_op(osm, shape))
+    for shape in shapes:
+        df = _geometry_op(osm, shape)
+        _run(df)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lines = _lines_outside_cache(plan)
+        assert any(line.startswith("InMemoryTableScan") for line in lines), plan
+        bad = [
+            line for line in lines
+            if "posexplode" in line or "node_id" in line or "InPandas" in line
+        ]
+        assert bad == [], plan
+    for name in ("way_coords", "relation_geometry"):
+        assert _cached(spark, _geometry(osm, name))
+
+
+def test_two_opens_share_the_derived_geometry(spark, fixture_pbf):
+    """(b) Every ``OSM`` on one unchanged file reads the same derived
+    frames."""
+    a = OSM.from_pbf(spark, fixture_pbf)
+    b = OSM.from_pbf(spark, fixture_pbf)
+    for name in ("way_coords", "relation_geometry"):
+        assert _geometry(a, name) is _geometry(b, name)
+
+
+def test_rewrite_gives_new_geometry_and_releases_the_old(spark, tmp_path):
+    """(c) A rewritten file gets geometry assembled afresh, and the old
+    version's derived caches are released when the new ones persist."""
+    path = str(tmp_path / "geom.osm.pbf")
+    _write_square(path, {200: [(10, 1, "outer")]})
+    osm = OSM.from_pbf(spark, path)
+    q = Query(ways=True, relations=True, geometry=True)
+    before = {(r["osmtype"], r["osmid"]): r["geometry"] for r in osm.query(q).collect()}
+    old = {name: _geometry(osm, name) for name in ("way_coords", "relation_geometry")}
+    assert all(_cached(spark, df) for df in old.values())
+
+    _write_square(path, {200: [(10, 1, "outer")], 201: [(10, 1, "outer")]}, side=2.0)
+    after = {(r["osmtype"], r["osmid"]): r["geometry"] for r in osm.query(q).collect()}
+    assert set(after) == set(before) | {(2, 201)}
+    for key in before:
+        assert after[key] != before[key] and "2.0000000 2.0000000" in after[key]
+    assert after[(2, 201)] == after[(2, 200)]
+    for name, df in old.items():
+        assert not _cached(spark, df), name
+        assert _geometry(osm, name) is not df
+        assert _cached(spark, _geometry(osm, name))
+
+
+def test_cleared_geometry_is_persisted_again_from_the_scan(spark, fixture_pbf):
+    """(d) After ``clearCache()`` the next geometry query persists the
+    derived frames again, and their caches fill from the scan's cache,
+    not from a second decode."""
+    osm = OSM.from_pbf(spark, fixture_pbf)
+    q = Query("buildings", geometry=True)
+    want = Counter(_hashable(r) for r in osm.query(q).collect())
+    frames = {name: _geometry(osm, name) for name in ("way_coords", "relation_geometry")}
+    spark.catalog.clearCache()
+    assert not any(_cached(spark, df) for df in frames.values())
+    df = osm.query(q)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    for name, frame in frames.items():
+        assert _geometry(osm, name) is frame
+        assert _cached(spark, frame), name
+        filled_by = (
+            cm.lookupCachedData(frame._jdf).get().cachedRepresentation()
+            .cacheBuilder().cachedPlan().toString()
+        )
+        lines = _lines_outside_cache(filled_by)
+        assert any(line.startswith("InMemoryTableScan") for line in lines), filled_by
+        assert not any("osmpbf" in line for line in lines), filled_by
+    assert Counter(_hashable(r) for r in df.collect()) == want
+
+
+@pytest.mark.parametrize("shape", _GEOMETRY_SHAPES)
+@pytest.mark.parametrize("which", ["grid", "catalog"])
+def test_geometry_equals_table_backed(spark, fixture_pbf, catalog_pbf, which, shape):
+    """(e) Geometry outputs (columns, rows, WKT and WKB) of a PBF-backed
+    OSM equal a table-backed OSM's on the same tables (with the query's
+    per-kind element relation), whose pipelines assemble per query; the
+    catalog file has relation-of-relations."""
+    path = fixture_pbf if which == "grid" else catalog_pbf
+    q = _GEOMETRY_QUERIES.get(shape, Query(nodes=True, ways=True, relations=True))
+    got = _geometry_op(OSM.from_pbf(spark, path), shape)
+    want = _geometry_op(_per_query_relation_osm(spark, path, q), shape)
+    assert got.columns == want.columns
+    rows = Counter(_hashable(r) for r in got.collect())
+    assert rows == Counter(_hashable(r) for r in want.collect())
+    assert sum(rows.values()) > 0
+
+
+def test_three_persisted_frames_per_file_version(spark, fixture_pbf, tmp_path):
+    """(f) Repeated geometry ops on one file version hold exactly three
+    persistent RDDs of their own: the scan and the two derived frames."""
+    path = str(tmp_path / "three.osm.pbf")
+    shutil.copy(fixture_pbf, path)
+    before = _persistent_rdd_ids(spark)
+    osm = OSM.from_pbf(spark, path)
+    seen = []
+    for _ in range(3):
+        for shape in _GEOMETRY_SHAPES:
+            _run(_geometry_op(osm, shape))
+        _run(osm.query(Query(ways=True, relations=True, geometry=True)))
+        seen.append(_persistent_rdd_ids(spark) - before)
+    assert len(seen[0]) == 3, seen
+    assert seen == [seen[0]] * 3, seen
+
+
+def test_nested_relation_probe_follows_a_rewrite(spark, tmp_path):
+    """An OSM opened before a rewrite that adds the first relation-type
+    member assembles the new relation-of-relations, like a fresh open."""
+    path = str(tmp_path / "nested.osm.pbf")
+    _write_square(path, {200: [(10, 1, "outer")]})
+    osm = OSM.from_pbf(spark, path)
+    assert [r["rel_id"] for r in osm.relation_areas().collect()] == [200]
+    _write_square(path, {200: [(10, 1, "outer")], 300: [(200, 2, "")]})
+    fresh = sorted(r["rel_id"] for r in OSM.from_pbf(spark, path).relation_areas().collect())
+    assert fresh == [200, 300]
+    assert sorted(r["rel_id"] for r in osm.relation_areas().collect()) == fresh
+
+
+def test_cache_relation_geometry_follows_a_rewrite(spark, tmp_path):
+    """``cache_relation_geometry()`` on a PBF-backed OSM holds nothing of
+    its own: after a rewrite the areas are the new file's."""
+    path = str(tmp_path / "warm.osm.pbf")
+    _write_square(path, {200: [(10, 1, "outer")]})
+    osm = OSM.from_pbf(spark, path).cache_relation_geometry()
+    assert [r["rel_id"] for r in osm.relation_areas().collect()] == [200]
+    _write_square(path, {201: [(10, 1, "outer"), (10, 1, "inner")]})
+    assert [r["rel_id"] for r in osm.relation_areas().collect()] == [201]
