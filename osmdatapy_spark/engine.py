@@ -12,25 +12,27 @@ Elements carry a ``tags`` map, node coordinates are the ``nodes`` table
 (SURVEY.md §1.5), and "querying" is a filter/projection pipeline
 Catalyst optimizes.
 
-Geometry is assembled once per file version too.  Two more frames are
-derived from the cached scan by the table-backed pipelines and persisted
-the same way when a query first needs them: ``way_coords(osmid,
-coords)``, the ordered coordinates of every way, and
-``relation_geometry(rel_id, kind, wkt)``, the area or line WKT of every
-geometry-bearing relation.  A geometry query joins or filters them
-instead of re-running the coordinate gather, the ring-chain kernel and
-the polygon assembly.  Geometry per way and per relation does not depend
-on which other rows a query selects, so reading the whole-file frames
-gives the same rows as assembling per query.
+Geometry is assembled once per file version too.  Up to three more
+frames are derived from the cached scan by the table-backed pipelines,
+each persisted the same way when a query first needs it:
+``way_coords(osmid, coords)``, the ordered coordinates of every way, and
+``relation_area`` / ``relation_line`` ``(rel_id, wkt)``, the area WKT of
+every multipolygon/boundary relation and the line WKT of every route.  A
+geometry query joins them instead of re-running the coordinate gather,
+the ring-chain kernel and the polygon assembly; one kind is never built
+for a reader of the other (``relation_lines()`` chains no multipolygon).
+Geometry per way and per relation does not depend on which other rows a
+query selects, so reading the whole-file frames gives the same rows as
+assembling per query.  The first geometry query of a kind pays for the
+whole file's frame of that kind, a selective one included.
 
-Lifetime of the three frames: they are keyed by the resolved path and by
-the name, size and ``mtime_ns`` of every file the path expands to, all
-from one stat pass per table access, so a file rewritten in place is
-decoded and assembled afresh on its next access, and an old version's
-frame is released when the new version's frame of the same kind is
-persisted.  A frame dropped by ``spark.catalog.clearCache()`` or
-``session.release`` is persisted again on its next access, from the
-scan's cache.
+Lifetime of the four frames: they are keyed by the resolved path and by
+the name, size and ``mtime_ns`` of every file the path expands to, from
+one stat pass per frame access, so a file rewritten in place is decoded
+and assembled afresh on its next access, and an old version's frame is
+released when the new version's frame of the same kind is persisted.  A
+frame dropped by ``spark.catalog.clearCache()`` or ``session.release``
+is persisted again on its next access, from the scan's cache.
 
 Construction paths:
 - ``OSM.from_tables(elements, nodes, ...)`` — any DataFrames in the §1.5
@@ -81,13 +83,13 @@ def _pbf_scan(spark: SparkSession, path: str) -> "tuple[DataFrame, str, tuple]":
 def _derive_geometry(name: str, t: dict) -> DataFrame:
     """A geometry frame of one PBF version, built by the table-backed
     pipelines over the bronze tables ``t`` of its cached scan:
-    ``way_coords(osmid, coords)`` of every way, or
-    ``relation_geometry(rel_id, kind, wkt)`` of every geometry-bearing
-    relation (whose nested-member probe then runs once per version)."""
+    ``way_coords(osmid, coords)`` of every way, or ``relation_area`` /
+    ``relation_line`` ``(rel_id, wkt)`` of every relation of that kind
+    (whose nested-member probe then runs once per version)."""
     base = OSM.from_tables(t["elements"], t["nodes"], t["way_refs"], t["rel_members"])
     if name == "way_coords":
         return base._refs_coords(t["elements"].filter(col("osmtype") == OSMTYPE_WAY))
-    return base._relation_geometry_frame()
+    return base._assemble_relations((name.removeprefix("relation_"),))
 
 
 class OSM:
@@ -126,11 +128,12 @@ class OSM:
             "way_refs": way_refs,
             "rel_members": rel_members,
         }
-        # (rel_id, kind, wkt) of ALL geometry-bearing relations of a
-        # table-backed OSM, persisted once by cache_relation_geometry() —
-        # the reusable bronze step behind relation_areas()/
-        # relation_lines()/query() (PBF-backed OSMs read their version's)
-        self._rel_geom_cache: Optional[DataFrame] = None
+        # kind -> (rel_id, wkt) of ALL relations of that kind of a
+        # table-backed OSM, each persisted when first read after
+        # cache_relation_geometry() — the reusable bronze step behind
+        # relation_areas()/relation_lines()/query() (PBF-backed OSMs read
+        # their version's).  None = not warmed
+        self._rel_geom_cache: "dict[str, DataFrame] | None" = None
         # memoized probe of the (fixed) tables: does rel_members contain
         # relation-type members (relation-of-relations geometry)?
         # None = not yet probed
@@ -138,26 +141,28 @@ class OSM:
 
     # -- bronze tables (pbf-backed OSMs read the shared decoded scan) ------
 
-    def _pbf_split(self, geometry: Optional[str] = None) -> "tuple[DataFrame, dict]":
+    def _pbf_split(self) -> "tuple[DataFrame, dict]":
         """(scan, frames) of a PBF-backed OSM: the four bronze tables by
         name, plus ``_elements_for``'s per-shape projections.  The scan
         lookup re-persists a dropped cache; the frames are rebuilt only
-        when the lookup returns another scan (the file changed).
-
-        ``geometry`` ("way_coords" or "relation_geometry") adds that
-        derived frame under its name: shared and persisted per file
-        version like the scan, keyed by the version of the same stat pass,
-        and built from the cached scan (``_derive_geometry``)."""
-        spark = self._pbf[0]
-        scan, slot, version = _pbf_scan(*self._pbf)
+        when the lookup returns another scan (the file changed)."""
+        scan = _pbf_scan(*self._pbf)[0]
         if self._split is None or self._split[0] is not scan:
             self._split = (scan, bronze_tables(scan))
-        frames = self._split[1]
-        if geometry is not None:
-            frames[geometry] = shared_persist(
-                spark, f"{slot}\0{geometry}", version, lambda: _derive_geometry(geometry, frames)
-            )
         return self._split
+
+    def _pbf_geometry(self, name: str) -> DataFrame:
+        """A derived geometry frame of a PBF-backed OSM ("way_coords",
+        "relation_area" or "relation_line"): shared and persisted per file
+        version like the scan, keyed by the version of the same stat pass,
+        and built from the cached scan (``_derive_geometry``)."""
+        scan, slot, version = _pbf_scan(*self._pbf)
+        return shared_persist(
+            self._pbf[0],
+            f"{slot}\0{name}",
+            version,
+            lambda: _derive_geometry(name, bronze_tables(scan)),
+        )
 
     def _table(self, name: str) -> Optional[DataFrame]:
         return self._tables[name] if self._pbf is None else self._pbf_split()[1][name]
@@ -196,11 +201,11 @@ class OSM:
         osmdata.py:29-39).  The file is decoded once per session into a
         persisted scan that every table and query of every ``OSM`` on the
         same unchanged file reads, and the first geometry query that needs
-        them derives ``way_coords`` and ``relation_geometry`` from that
-        scan and persists them next to it: three frames per file version,
-        shared by every ``OSM`` on it, released when the file is rewritten
-        and persisted again after ``clearCache()`` (see the module
-        docstring).  The caches are MEMORY_AND_DISK: they fit while the
+        one derives ``way_coords``, ``relation_area`` or ``relation_line``
+        from that scan and persists it next to it: at most four frames per
+        file version, shared by every ``OSM`` on it, released when the
+        file is rewritten and persisted again after ``clearCache()`` (see
+        the module docstring).  The caches are MEMORY_AND_DISK: they fit while the
         decoded elements and way coordinates fit in executor storage
         memory plus local disk; beyond that, write bronze parquet with
         ``read_pbf_tables`` and open it with ``from_bronze``."""
@@ -490,27 +495,14 @@ class OSM:
 
         if q.geometry:
             out = self._with_geometry(out, q)
-            if q.relations and self.rel_members is not None:
+            branches = self._relation_branches(q)
+            if q.relations and self.rel_members is not None and branches:
                 # relation geometry (G5 dispatch): areas for
                 # type ∈ {multipolygon, boundary}, linestrings for
-                # type=route, one left join (reference _frame.py:87-105).
-                # A cached whole-file frame is joined as it is: the left
-                # join keeps only the selected relations
-                geoms = self._relation_geometry()
-                if geoms is None:
-                    # ONE shared chaining pipeline, scoped to the relations
-                    # the query SELECTS (semi-join on the filtered element
-                    # ids): a planet-scale query for bus routes must not
-                    # chain every multipolygon's member ways — the probe
-                    # side is the post-filter relation set, which AQE
-                    # broadcasts when small
-                    kept = (
-                        q.apply(self._elements_for(q, only={OSMTYPE_RELATION}))
-                        .filter(col("osmtype") == OSMTYPE_RELATION)
-                        .select(col("osmid").alias("rel_id"))
-                    )
-                    geoms = self._relation_geometries(kept=kept)
-                rel_geoms = geoms.select(col("rel_id").alias("_arid"), col("wkt").alias("_awkt"))
+                # type=route, one left join (reference _frame.py:87-105)
+                rel_geoms = self._relation_geometries(branches, q).select(
+                    col("rel_id").alias("_arid"), col("wkt").alias("_awkt")
+                )
                 out = out.join(
                     rel_geoms,
                     (col("osmtype") == OSMTYPE_RELATION) & (col("osmid") == col("_arid")),
@@ -612,7 +604,7 @@ class OSM:
         out = out.withColumn("geom_type", gt)
         if q.ways and "refs" in out.columns:
             if self._pbf is not None:
-                coords = self._pbf_split("way_coords")[1]["way_coords"]
+                coords = self._pbf_geometry("way_coords")
             else:
                 coords = self._refs_coords(out.filter(col("osmtype") == OSMTYPE_WAY))
             out = out.join(coords, "osmid", "left")
@@ -748,6 +740,19 @@ class OSM:
             .filter(col("kind").isNotNull())
         )
 
+    @staticmethod
+    def _relation_branches(q: Query) -> tuple:
+        """The G5 kinds whose relations ``q`` can select: both, unless its
+        ``relation_type`` filter rules one out — a bus-route query
+        (``relation_type=["route"]``) reads or builds no area geometry."""
+        from osmdatapy_spark.defaults import RELATION_AREA, RELATION_LINESTRING
+
+        return tuple(
+            kind
+            for kind, types in (("area", RELATION_AREA), ("line", RELATION_LINESTRING))
+            if q.relation_type is None or set(types) & set(q.relation_type)
+        )
+
     def relation_areas(self) -> DataFrame:
         """(rel_id, wkt) POLYGON/MULTIPOLYGON for type ∈ {multipolygon,
         boundary} relations (reference ``_frame.py:107-179``)."""
@@ -759,41 +764,36 @@ class OSM:
         return self._relation_geometries(("line",))
 
     def cache_relation_geometry(self) -> "OSM":
-        """Materialize the geometry of ALL geometry-bearing relations as
-        a persisted ``(rel_id, kind, wkt)`` bronze table (like
-        ``to_bronze`` for the element tables): the G6 chain kernel, the
-        node-coordinate join and the polygon/line assembly run ONCE, and
-        every later ``relation_areas()`` / ``relation_lines()`` / geometry
-        ``query()`` filters the persisted table.  The persisted unit is
-        one WKT per relation — a sliver of the corpus even at planet scale
-        (where this table would be a written bronze parquet, same
-        contract).  One such cache is kept per session: warming another
-        ``OSM`` releases this one if it is materialized, and this ``OSM``
-        then recomputes the assembly.  A PBF-backed OSM already reads
-        this table, persisted per file version, so there this is a no-op."""
+        """Keep the geometry of ALL relations of each kind as a persisted
+        ``(rel_id, wkt)`` bronze table (like ``to_bronze`` for the element
+        tables): the first ``relation_areas()`` / ``relation_lines()`` /
+        geometry ``query()`` that reads a kind persists that kind's table,
+        so its G6 chain kernel, node-coordinate join and polygon/line
+        assembly run ONCE, and every later read scans the table.  The
+        persisted unit is one WKT per relation — a sliver of the corpus
+        even at planet scale (where this table would be a written bronze
+        parquet, same contract).  One such cache per kind is kept per
+        session: warming another ``OSM`` releases this one's if it is
+        materialized, and this ``OSM`` then recomputes the assembly.  A
+        PBF-backed OSM already reads these tables, persisted per file
+        version, so there this is a no-op."""
         if self._pbf is None and self._rel_geom_cache is None:
-            self._rel_geom_cache = managed_persist(
-                self._relation_geometry_frame(), "engine.relation_geometry"
-            )
+            self._rel_geom_cache = {}
         return self
 
-    def _relation_geometry(self) -> Optional[DataFrame]:
-        """The cached ``(rel_id, kind, wkt)`` table of every
-        geometry-bearing relation: the file version's on a PBF-backed OSM,
-        ``cache_relation_geometry()``'s on a table-backed one (None before
-        it is warmed)."""
+    def _cached_relation_geometry(self, kind: str) -> Optional[DataFrame]:
+        """The persisted ``(rel_id, wkt)`` table of every relation of
+        ``kind`` ("area" or "line"): the file version's on a PBF-backed
+        OSM, ``cache_relation_geometry()``'s on a table-backed one (None
+        before it is warmed)."""
         if self._pbf is not None:
-            return self._pbf_split("relation_geometry")[1]["relation_geometry"]
-        return self._rel_geom_cache
-
-    def _relation_geometry_frame(self) -> DataFrame:
-        """``(rel_id, kind, wkt)`` of every geometry-bearing relation: one
-        single-branch assembly per kind, so building it persists no
-        intermediate frame (the G5 kinds are disjoint)."""
-        area, line = (
-            self._relation_geometries((b,)).withColumn("kind", lit(b)) for b in ("area", "line")
-        )
-        return area.unionByName(line).select("rel_id", "kind", "wkt")
+            return self._pbf_geometry(f"relation_{kind}")
+        cache = self._rel_geom_cache
+        if cache is not None and kind not in cache:
+            cache[kind] = managed_persist(
+                self._assemble_relations((kind,)), f"engine.relation_{kind}"
+            )
+        return None if cache is None else cache[kind]
 
     def _flatten_way_members(self, kinds: DataFrame, max_depth: int = 8) -> DataFrame:
         """(rel_id, way_id, member_pos, role, kind) way membership of each
@@ -916,27 +916,41 @@ class OSM:
         return self._ring_coords(chains, ["ring_role", "kind"])
 
     def _relation_geometries(
-        self, branches: tuple = ("area", "line"), kept: Optional[DataFrame] = None
+        self, branches: tuple = ("area", "line"), q: Optional[Query] = None
     ) -> DataFrame:
         """(rel_id, wkt) of the geometry-bearing relations of the kinds in
-        ``branches``, restricted to the ``rel_id``s of ``kept`` when given.
+        ``branches``: the persisted table of each kind when it is cached
+        (every PBF-backed OSM; a table-backed one after
+        ``cache_relation_geometry()``) — whole, the caller's join keeps
+        the relations it selects — and otherwise assembled per call,
+        scoped to the relations ``q`` selects when given."""
+        cached = [self._cached_relation_geometry(b) for b in branches]
+        if None not in cached:
+            out = cached[0]
+            for c in cached[1:]:
+                out = out.unionByName(c)
+            return out
+        return self._assemble_relations(branches, q)
 
-        With the ``(rel_id, kind, wkt)`` table cached (every PBF-backed
-        OSM; a table-backed one after ``cache_relation_geometry()``) this
-        filters it by kind and left-semi-joins ``kept``.  Otherwise it is
-        the relation geometry assembly shared by areas and routes: ONE
+    def _assemble_relations(self, branches: tuple, q: Optional[Query] = None) -> DataFrame:
+        """Relation geometry assembly shared by areas and routes: ONE
         member-chaining pipeline (G6 kernel, endpoint join, node-sequence
         expansion), splitting into the polygon ring algebra (G7-G9 + G3)
         and the linestring branch only at WKT assembly — the two types are
-        disjoint by the G5 dispatch, so a unionByName stitches the result."""
-        cached = self._relation_geometry()
-        if cached is not None:
-            out = cached.filter(col("kind").isin(*branches))
-            if kept is not None:
-                out = out.join(kept, "rel_id", "left_semi")
-            return out.select("rel_id", "wkt")
+        disjoint by the G5 dispatch, so a unionByName stitches the result.
+
+        With ``q``, assembly is scoped to the relations the query SELECTS
+        (semi-join on the filtered element ids): a planet-scale query for
+        bus routes must not chain every multipolygon's member ways — the
+        probe side is the post-filter relation set, which AQE broadcasts
+        when small."""
         kinds = self._relation_kinds(area="area" in branches, line="line" in branches)
-        if kept is not None:
+        if q is not None:
+            kept = (
+                q.apply(self._elements_for(q, only={OSMTYPE_RELATION}))
+                .filter(col("osmtype") == OSMTYPE_RELATION)
+                .select(col("osmid").alias("rel_id"))
+            )
             kinds = kinds.join(kept, "rel_id", "left_semi")
         if len(branches) > 1:
             # one-shot two-branch path: persist the shared gather for THIS

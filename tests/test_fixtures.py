@@ -164,7 +164,7 @@ def test_query_relation_geometry(osm):
 def test_cached_relation_geometry_reuse(spark):
     """cache_relation_geometry() is the reusable bronze step: after
     warming, relation_lines()/relation_areas() read the persisted
-    (rel_id, kind, wkt) table (InMemoryTableScan) with <=3 exchanges,
+    (rel_id, wkt) table of their kind (InMemoryTableScan) with <=3 exchanges,
     instead of re-running the 9-exchange chain/gather prefix — and
     results are identical."""
     from osmdatapy_spark.plans.audit import plan_summary
@@ -183,4 +183,5 @@ def test_cached_relation_geometry_reuse(spark):
     assert warm == cold
     warm_areas = {r["rel_id"]: r["wkt"] for r in osm.relation_areas().collect()}
     assert warm_areas == cold_areas
-    osm._rel_geom_cache.unpersist()
+    for df in osm._rel_geom_cache.values():
+        df.unpersist()

@@ -2,8 +2,9 @@
 scan per file version and session feeds every bronze table and query;
 query outputs equal the per-kind source relations the engine used to build
 for each query.  Geometry is assembled once per file version too: the
-derived ``way_coords`` and ``relation_geometry`` frames are persisted next
-to the scan, and geometry outputs equal a table-backed ``OSM``'s."""
+derived ``way_coords``, ``relation_area`` and ``relation_line`` frames are
+persisted next to the scan, each when first needed, and geometry outputs
+equal a table-backed ``OSM``'s."""
 
 from __future__ import annotations
 
@@ -25,9 +26,12 @@ def _scan(osm: OSM):
     return osm._pbf_split()[0]
 
 
+_DERIVED = ("way_coords", "relation_area", "relation_line")
+
+
 def _geometry(osm: OSM, name: str):
-    """The file version's derived ``way_coords`` or ``relation_geometry``."""
-    return osm._pbf_split(name)[1][name]
+    """The file version's derived frame ``name`` (one of ``_DERIVED``)."""
+    return osm._pbf_geometry(name)
 
 
 def _slot(path: str, name: str) -> str:
@@ -226,13 +230,20 @@ def test_outputs_equal_per_query_relations(spark, fixture_pbf, q):
 
 
 def test_relation_geometry_persists_do_not_accumulate(spark, fixture_pbf):
-    """Every two-branch relation-geometry query persists its ring
-    coordinates; the count of persistent RDDs stays flat over repeated
-    queries instead of growing by one per query."""
-    osm = OSM.from_pbf(spark, fixture_pbf)
-    q = Query(ways=True, relations=True, geometry=True)
+    """Every two-branch relation-geometry query of a table-backed OSM
+    persists its ring coordinates; the count of persistent RDDs stays flat
+    over repeated queries instead of growing by one per query.  The
+    queries select different relations, so each persists its own plan."""
+    t = read_pbf_tables(spark, fixture_pbf)
+    osm = OSM.from_tables(t["elements"], t["nodes"], t["way_refs"], t["rel_members"])
+    queries = [
+        Query(ways=True, relations=True, geometry=True),
+        Query(relations=True, geometry=True),
+        Query(relations=True, must_tags=["type"], geometry=True),
+        Query(nodes=True, relations=True, must_tags=["name"], geometry=True),
+    ]
     counts = []
-    for _ in range(4):
+    for q in queries:
         _run(osm.query(q))
         counts.append(_persistent_rdds(spark))
     assert counts == [counts[0]] * 4, counts
@@ -240,7 +251,7 @@ def test_relation_geometry_persists_do_not_accumulate(spark, fixture_pbf):
 
 def test_cache_relation_geometry_persists_through_session(spark, fixture_pbf):
     """On a PBF-backed OSM ``cache_relation_geometry`` is a no-op: areas
-    already read the file version's ``relation_geometry``, persisted
+    already read the file version's ``relation_area``, persisted
     through ``session``, so a session-wide ``release`` drops it like every
     other managed frame and the next query persists it again."""
     from osmdatapy_spark import session
@@ -248,10 +259,10 @@ def test_cache_relation_geometry_persists_through_session(spark, fixture_pbf):
     osm = OSM.from_pbf(spark, fixture_pbf)
     assert osm.cache_relation_geometry() is osm
     want = sorted(tuple(r) for r in osm.relation_areas().collect())
-    geom = _geometry(osm, "relation_geometry")
+    geom = _geometry(osm, "relation_area")
     assert _cached(spark, geom)
     assert "InMemoryTableScan" in osm.relation_areas()._jdf.queryExecution().executedPlan().toString()
-    session.release(_slot(fixture_pbf, "relation_geometry"))
+    session.release(_slot(fixture_pbf, "relation_area"))
     assert not _cached(spark, geom)
     assert sorted(tuple(r) for r in osm.relation_areas().collect()) == want
     assert _cached(spark, geom)
@@ -383,7 +394,7 @@ def test_warm_geometry_plans_read_the_derived_caches(spark, fixture_pbf):
             if "posexplode" in line or "node_id" in line or "InPandas" in line
         ]
         assert bad == [], plan
-    for name in ("way_coords", "relation_geometry"):
+    for name in _DERIVED:
         assert _cached(spark, _geometry(osm, name))
 
 
@@ -392,7 +403,7 @@ def test_two_opens_share_the_derived_geometry(spark, fixture_pbf):
     frames."""
     a = OSM.from_pbf(spark, fixture_pbf)
     b = OSM.from_pbf(spark, fixture_pbf)
-    for name in ("way_coords", "relation_geometry"):
+    for name in _DERIVED:
         assert _geometry(a, name) is _geometry(b, name)
 
 
@@ -404,7 +415,7 @@ def test_rewrite_gives_new_geometry_and_releases_the_old(spark, tmp_path):
     osm = OSM.from_pbf(spark, path)
     q = Query(ways=True, relations=True, geometry=True)
     before = {(r["osmtype"], r["osmid"]): r["geometry"] for r in osm.query(q).collect()}
-    old = {name: _geometry(osm, name) for name in ("way_coords", "relation_geometry")}
+    old = {name: _geometry(osm, name) for name in _DERIVED}
     assert all(_cached(spark, df) for df in old.values())
 
     _write_square(path, {200: [(10, 1, "outer")], 201: [(10, 1, "outer")]}, side=2.0)
@@ -426,7 +437,7 @@ def test_cleared_geometry_is_persisted_again_from_the_scan(spark, fixture_pbf):
     osm = OSM.from_pbf(spark, fixture_pbf)
     q = Query("buildings", geometry=True)
     want = Counter(_hashable(r) for r in osm.query(q).collect())
-    frames = {name: _geometry(osm, name) for name in ("way_coords", "relation_geometry")}
+    frames = {name: _geometry(osm, name) for name in _DERIVED}
     spark.catalog.clearCache()
     assert not any(_cached(spark, df) for df in frames.values())
     df = osm.query(q)
@@ -461,9 +472,9 @@ def test_geometry_equals_table_backed(spark, fixture_pbf, catalog_pbf, which, sh
     assert sum(rows.values()) > 0
 
 
-def test_three_persisted_frames_per_file_version(spark, fixture_pbf, tmp_path):
-    """(f) Repeated geometry ops on one file version hold exactly three
-    persistent RDDs of their own: the scan and the two derived frames."""
+def test_four_persisted_frames_per_file_version(spark, fixture_pbf, tmp_path):
+    """(f) Repeated geometry ops on one file version hold exactly four
+    persistent RDDs of their own: the scan and the three derived frames."""
     path = str(tmp_path / "three.osm.pbf")
     shutil.copy(fixture_pbf, path)
     before = _persistent_rdd_ids(spark)
@@ -474,7 +485,7 @@ def test_three_persisted_frames_per_file_version(spark, fixture_pbf, tmp_path):
             _run(_geometry_op(osm, shape))
         _run(osm.query(Query(ways=True, relations=True, geometry=True)))
         seen.append(_persistent_rdd_ids(spark) - before)
-    assert len(seen[0]) == 3, seen
+    assert len(seen[0]) == 4, seen
     assert seen == [seen[0]] * 3, seen
 
 
@@ -500,3 +511,38 @@ def test_cache_relation_geometry_follows_a_rewrite(spark, tmp_path):
     assert [r["rel_id"] for r in osm.relation_areas().collect()] == [200]
     _write_square(path, {201: [(10, 1, "outer"), (10, 1, "inner")]})
     assert [r["rel_id"] for r in osm.relation_areas().collect()] == [201]
+
+
+def test_one_kind_of_relation_geometry_builds_only_its_frame(spark, fixture_pbf, tmp_path):
+    """A cold ``relation_lines()`` or route query persists the scan and
+    ``relation_line`` only: no multipolygon is chained for a reader of
+    routes; ``relation_areas()`` then adds its own frame."""
+    path = str(tmp_path / "lines.osm.pbf")
+    shutil.copy(fixture_pbf, path)
+    before = _persistent_rdd_ids(spark)
+    osm = OSM.from_pbf(spark, path)
+    _run(osm.relation_lines())
+    assert len(_persistent_rdd_ids(spark) - before) == 2
+    assert _cached(spark, _geometry(osm, "relation_line"))
+    _run(osm.relation_areas())
+    assert len(_persistent_rdd_ids(spark) - before) == 3
+
+    shutil.copy(fixture_pbf, path + ".copy")
+    before = _persistent_rdd_ids(spark)
+    routes = Query(relations=True, relation_type=["route"], geometry=True)
+    rows = OSM.from_pbf(spark, path + ".copy").query(routes).collect()
+    assert len(_persistent_rdd_ids(spark) - before) == 2
+    assert rows and all(r["geometry"].startswith(("LINESTRING", "MULTILINESTRING")) for r in rows)
+
+
+@pytest.mark.parametrize("types", [["route"], ["multipolygon"], ["site"]])
+def test_relation_type_query_equals_table_backed(spark, catalog_pbf, types):
+    """A query whose ``relation_type`` rules a kind out gives the same
+    rows as a table-backed OSM, which assembles it per query."""
+    q = Query(relations=True, relation_type=types, geometry=True)
+    got = OSM.from_pbf(spark, catalog_pbf).query(q)
+    want = _per_query_relation_osm(spark, catalog_pbf, q).query(q)
+    assert got.columns == want.columns
+    assert Counter(_hashable(r) for r in got.collect()) == Counter(
+        _hashable(r) for r in want.collect()
+    )
